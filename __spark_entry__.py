@@ -2459,7 +2459,7 @@ UNION ALL SELECT 's10', rid, field, value FROM {vals(_RFX_S10_EXPECTED)}
 # ---------------------------------------------------------------------------
 # kg_scalar_suite2 — the remaining scalar ids: F3 url_encode (java
 # URLEncoder semantics), F4 iri_fix (fixed 12-char percent map), F7 Unicode
-# NFC (DuckDB nfc_normalize vs the pandas UDF — genuinely recomputed), F20
+# NFC (DuckDB nfc_normalize vs the ICU4J JVM call — genuinely recomputed), F20
 # TM35FIN→WGS84 (the full inverse Gauss–Krüger series re-expressed in SQL:
 # hyperbolics via exp, atanh via ln, the 6-round conformal→geodetic
 # fixed-point unrolled; same JHS-154 constants).

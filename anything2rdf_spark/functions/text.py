@@ -1,15 +1,14 @@
 """Text scalar kernel (SURVEY §2.4 F1-F11, F21-F27).
 
-Native Column expressions wherever possible; the two genuinely
-Python-requiring pieces (Unicode NFC, dictionary mention scan) are
-Arrow-vectorized pandas UDFs operating on whole batches — never per-row
-Python UDFs (input_hint mandate).
+Native Column expressions wherever possible, Unicode NFC included (a JVM
+call into the ICU4J that ships with Spark). The one Python piece left is
+the large-dictionary mention scan, an Arrow-vectorized pandas UDF operating
+on whole batches — never a per-row Python UDF (input_hint mandate).
 """
 
 from __future__ import annotations
 
 import re
-import unicodedata
 
 import pandas as pd
 from pyspark.sql import Column
@@ -139,11 +138,19 @@ def gender_label(col: Column | str) -> Column:
     )
 
 
-@F.pandas_udf(T.StringType())
-def nfc_normalize(s: pd.Series) -> pd.Series:
-    """Unicode NFC normalization (HelmetMARC2ISBNRDF.scala:46-50) — Arrow
-    batch; pandas ``.map`` over a batch, not a per-row Spark UDF."""
-    return s.map(lambda x: unicodedata.normalize("NFC", x) if x is not None else None)
+def nfc_normalize(col: Column | str) -> Column:
+    """Unicode NFC normalization (HelmetMARC2ISBNRDF.scala:46-50) as a
+    native expression: a JVM reflection call to ICU4J's
+    ``Normalizer.compose(s, compat=false)``. ICU4J is one of Spark's own
+    jars (its collations use it), so no Python worker and no Arrow
+    boundary is involved. NFC follows the JVM's ICU Unicode version, not
+    Python's ``unicodedata``; the two agree on every character both know.
+    The NULL guard is required: reflection on a NULL argument raises."""
+    c = _c(col)
+    return F.when(
+        c.isNotNull(),
+        F.java_method(F.lit("com.ibm.icu.text.Normalizer"), F.lit("compose"), c, F.lit(False)),
+    )
 
 
 def norm_surface(col: Column | str) -> Column:

@@ -12,7 +12,10 @@ equi-joins; the label distance roughly doubles per round, so a chain of
 length L converges in O(log L) rounds — verified in tests on a 1000-node
 chain. Every round ends in ``localCheckpoint`` to cut lineage (SURVEY §4.2
 custom-work item 1); at cluster scale this would be an Iceberg temp-table
-checkpoint instead.
+checkpoint instead. A checkpoint keeps its source plan's size estimate,
+and a round's joins multiply their inputs' estimates, so each round's
+checkpoint is given the round-0 label table's estimate instead (see
+``_with_estimate_of``).
 """
 
 from __future__ import annotations
@@ -23,6 +26,29 @@ from pyspark.sql import functions as F
 from .. import NS, OWL_SAMEAS
 from .. import iri
 from ..schemas import TRIPLE_COLS
+
+
+def _with_estimate_of(checkpointed: DataFrame, like: DataFrame) -> DataFrame:
+    """``checkpointed`` (a ``localCheckpoint``) with ``like``'s size
+    estimate in place of the one it inherited from its source plan.
+
+    Every round's label table has one (node, comp) row per node, the shape
+    of round 0's, so round 0's estimate is the right one for all rounds.
+    Inherited instead, the estimate is the product of the round's join
+    inputs and compounds across rounds, until planning a round takes longer
+    than running it (a shuffled 16-node chain did not finish in 300 s).
+    Only planner metadata changes: the copy is the same ``LogicalRDD`` leaf
+    over the same materialized RDD — no job, no Python round trip."""
+    lp = checkpointed._jdf.queryExecution().logical()
+    session, _, constraints = (lp.otherCopyArgs().apply(i) for i in range(3))
+    jvm = checkpointed.sparkSession._jvm
+    stats = like._jdf.queryExecution().logical().stats()
+    fresh = lp.copy(
+        lp.output(), lp.rdd(), lp.outputPartitioning(), lp.outputOrdering(),
+        lp.isStreaming(), lp.stream(), session, jvm.scala.Some(stats), constraints,
+    )
+    jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(session, fresh)
+    return DataFrame(jdf, checkpointed.sparkSession)
 
 
 def connected_components(
@@ -53,6 +79,7 @@ def connected_components(
     if checkpoint:
         und = und.localCheckpoint()
         parent = parent.localCheckpoint()
+        parent0 = parent
 
     from pyspark.sql import Observation
 
@@ -94,7 +121,7 @@ def connected_components(
             # the wall-clock driver of the O(log L) loop at any scale)
             obs = Observation()
             p2o = p2.observe(obs, F.count_if(F.col("comp") != F.col("_old")).alias("chg"))
-            parent = p2o.select("node", "comp").localCheckpoint()
+            parent = _with_estimate_of(p2o.select("node", "comp").localCheckpoint(), parent0)
             changed = obs.get["chg"]
         else:
             changed = p2.filter(F.col("comp") != F.col("_old")).limit(1).count()

@@ -10,8 +10,9 @@ semantics, Anything2RDF.scala:126-144 / SURVEY A6).
 Rule model: each emission rule is a nullable struct inside one array column;
 ``explode`` + null-filter turns a turn-row into 5-10 triple rows. All guards
 are native ``when`` expressions (ANE semantics, Anything2RDF.scala:101-107).
-Mention detection is the only Python: an Arrow-batched regex scan
-(functions.text.mention_scan_udf) — zero per-row Python.
+Mention detection is native up to ``functions.text.AC_THRESHOLD`` surfaces;
+larger dictionaries scan in an Arrow-batched Aho-Corasick pandas UDF
+(functions.text.mention_scan_udf) — never per-row Python.
 """
 
 from __future__ import annotations
@@ -208,32 +209,19 @@ def extract_mentions(transcripts: DataFrame, dictionary_surfaces) -> DataFrame:
     """Transcripts → mention rows (conv_id, turn_idx, surface, norm_surface)
     for the linking stage — the turn-level extractor extension point
     (SURVEY §2.12). ``dictionary_surfaces``: list[str] or a Broadcast of one
-    (see functions.text.mention_scan_udf).
+    (see functions.text.mention_matches).
 
-    norm_surface is computed once per DISTINCT dictionary surface and
-    broadcast-joined back (round-6 optimization): every matched surface IS a
-    dictionary entry (the scanners emit canonical dictionary casing), so
-    running :func:`~anything2rdf_spark.functions.text.norm_surface` — whose
-    NFC step is an Arrow-batched Python UDF — per mention row put a second
-    ArrowEvalPython pass over the (much larger) mention relation for values
-    already determined by the dictionary. The tiny surface→norm table uses
-    the SAME column expression, so values are identical by construction
-    (test-pinned); the join is a broadcast hash join in the same codegen
-    stage, and the surface list is driver-resident either way."""
-    mentions = admissible(transcripts).select(
+    norm_surface is computed on each mention row by the same native
+    :func:`~anything2rdf_spark.functions.text.norm_surface` expression that
+    normalizes the dictionary labels in linking, so the two sides agree by
+    construction. With a small dictionary (the native scan) the whole
+    relation is one narrow projection over the scan: no Python worker, no
+    join."""
+    return admissible(transcripts).select(
         "conv_id",
         "turn_idx",
         F.explode(TX.mention_matches(F.col("text"), dictionary_surfaces)).alias("surface"),
-    )
-    surfs = dictionary_surfaces.value if hasattr(dictionary_surfaces, "value") else dictionary_surfaces
-    spark = transcripts.sparkSession
-    norm_df = (
-        spark.createDataFrame([(s,) for s in sorted(set(surfs))], "surface string")
-        .select("surface", TX.norm_surface("surface").alias("norm_surface"))
-    )
-    return mentions.join(F.broadcast(norm_df), "surface").select(
-        "conv_id", "turn_idx", "surface", "norm_surface"
-    )
+    ).select("conv_id", "turn_idx", "surface", TX.norm_surface("surface").alias("norm_surface"))
 
 
 _TOKEN_SEP = r"[^\p{L}\p{N}_]+"  # \W+ with unicode letters/digits
@@ -275,8 +263,6 @@ def extract_mentions_join(
     output equals ``extract_mentions`` (test-enforced, including overlap
     cases). Output: (conv_id, turn_idx, surface, norm_surface).
     """
-    from ..functions import text as _TX
-
     surf = (
         surfaces.select(F.col(surface_col).alias("_surface"))
         .filter(F.col("_surface").isNotNull())
@@ -293,11 +279,10 @@ def extract_mentions_join(
         .groupBy("_skey", "_tok", "_ntok")
         .agg(F.min("_surface").alias("_surface"))
         # norm once per distinct surface (dictionary-sized relation) instead
-        # of per selected mention: norm_surface's NFC step is a Python UDF,
-        # and the dictionary side is orders of magnitude smaller than the
-        # mention relation at scale — the value rides the candidate join and
-        # the selection fold (round-6; same expression, identical values)
-        .withColumn("_norm", _TX.norm_surface("_surface"))
+        # of per selected mention: the dictionary side is orders of
+        # magnitude smaller than the mention relation at scale, and the
+        # value rides the candidate join and the selection fold
+        .withColumn("_norm", TX.norm_surface("_surface"))
     )
     turns = admissible(transcripts).select(
         "conv_id", "turn_idx", _word_tokens("text").alias("_toks")

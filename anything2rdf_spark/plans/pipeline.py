@@ -5,12 +5,21 @@
 Each stage is a pure function *checkpoint tables → checkpoint tables*,
 orchestrated by a thin driver that records per-stage/per-partition lineage +
 metrics and skips completed stages on re-run (idempotent resume — north_star
-mandate). On a cluster the checkpoints are bucket-partitioned Iceberg
-tables; here the Catalog writes the same layout as parquet.
+mandate).
+
+Checkpoint layout: only the final ``triples`` table is hash-bucketed by
+``conv_id`` (the Catalog's ``pbucket`` directories, the parquet stand-in for
+an Iceberg ``bucket(n, conv_id)`` table), because it is the product readers
+scan. The ten transient stage tables are written flat, with the partitioning
+their plans produce: no stage reads them by bucket, so a 32-way hash
+shuffle and a file per bucket on each of them bought nothing but a shuffle,
+more files and more commit work (the cost rule of *Lightweight
+Materialization for Fast Dashboards Over Joins*, SIGMOD 2023). Their
+lineage rows are per written partition (see ``Catalog.write``).
 
 Scale notes (the plan at 1000 executors):
-* extract is a narrow map over the transcripts scan — no shuffle; its
-  parallelism is the input's partition count (bucketed by conv_id).
+* extract is a narrow map over the transcripts_norm scan — no shuffle; its
+  parallelism is that table's split count.
 * link shuffles only the mentions relation (tiny vs transcripts) and
   broadcasts the surface index; a hot surface form is absorbed by AQE
   skew-join + the two-phase dedup.
@@ -37,6 +46,10 @@ from .lineage import LineageRegistry, new_run_id
 
 STAGES = ["normalize", "extract", "link", "canonicalize", "materialize"]
 
+# the one table written hash-bucketed (by this column); every other stage
+# table is a transient checkpoint and is written flat
+FINAL_TABLE, FINAL_BUCKET_COL = "triples", "conv_id"
+
 
 class Pipeline:
     def __init__(
@@ -56,9 +69,10 @@ class Pipeline:
         # any broadcast budget) fall back to a shuffle join that AQE plans
         self.broadcast_map_max_rows = broadcast_map_max_rows
 
-    def _stage(self, run_id, name, fingerprint, force, compute, tables, metrics, bucket_cols=None):
+    def _stage(self, run_id, name, fingerprint, force, compute, tables, metrics):
         """Run one stage with skip-if-complete semantics; ``compute`` returns
-        {table_name: DataFrame}; all get checkpointed."""
+        {table_name: DataFrame}; all get checkpointed, flat except the final
+        triple table."""
         if not force and self.registry.is_done(name, fingerprint) and all(
             self.catalog.exists(t) for t in tables
         ):
@@ -68,9 +82,9 @@ class Pipeline:
         outputs = compute()
         pcounts: dict[int, int] = {}
         for tname, df in outputs.items():
-            bc = (bucket_cols or {}).get(tname, "conv_id")
-            # per-partition lineage counts ride the primary output's write
-            # job as df.observe metrics — NO read-back scan (at 100 TB a
+            bc = FINAL_BUCKET_COL if tname == FINAL_TABLE else None
+            # per-partition lineage counts come from the primary output's
+            # parquet footers — NO read-back scan (at 100 TB a
             # count-over-read-back is a full extra pass per stage)
             counts = self.catalog.write(
                 df, tname, bucket_col=bc, collect_partition_counts=(tname == tables[0])
@@ -144,9 +158,10 @@ class Pipeline:
                         for r in dictionary.select(F.explode("alt_labels").alias("a")).collect()
                     ]
                 # one broadcast per run: the surface list ships once per
-                # executor (not once per task via closure); the scanner
-                # (regex below AC_THRESHOLD surfaces, Aho-Corasick automaton
-                # above) is built once per executor process from it
+                # executor (not once per task via closure); up to
+                # AC_THRESHOLD surfaces the scan is a native JVM regex, above
+                # it an Aho-Corasick automaton built once per executor
+                # process from the broadcast
                 surfaces_bc = self.spark.sparkContext.broadcast(list(surfaces))
             norm = cat.read("transcripts_norm")
             triples = EX.extract_triples(norm, ns=self.ns)
@@ -191,8 +206,7 @@ class Pipeline:
         try:
             self._stage(run_id, "link", fingerprint, force, link,
                         ["mentions_linked", "triples_mentions", "triples_dictionary", "entities_new"],
-                        metrics,
-                        bucket_cols={"triples_dictionary": None, "entities_new": None})
+                        metrics)
         finally:
             for df in link_persisted:
                 df.unpersist()
@@ -209,8 +223,7 @@ class Pipeline:
             }
 
         self._stage(run_id, "canonicalize", fingerprint, force, canonicalize,
-                    ["canonical_map", "triples_sameas"], metrics,
-                    bucket_cols={"canonical_map": None, "triples_sameas": None})
+                    ["canonical_map", "triples_sameas"], metrics)
 
         # ---- stage 5: materialize -----------------------------------------
         def materialize():
@@ -240,9 +253,9 @@ class Pipeline:
                     broadcast_map=n_map <= self.broadcast_map_max_rows,
                 )
             all_triples = data_triples.unionByName(cat.read("triples_sameas"))
-            return {"triples": EX.dedup_triples(all_triples)}
+            return {FINAL_TABLE: EX.dedup_triples(all_triples)}
 
-        self._stage(run_id, "materialize", fingerprint, force, materialize, ["triples"], metrics)
+        self._stage(run_id, "materialize", fingerprint, force, materialize, [FINAL_TABLE], metrics)
 
         metrics["total_wall_s"] = sum(
             m.get("wall_s", 0.0) for k, m in metrics.items() if isinstance(m, dict)
@@ -250,4 +263,4 @@ class Pipeline:
         return metrics
 
     def triples(self) -> DataFrame:
-        return self.catalog.read("triples")
+        return self.catalog.read(FINAL_TABLE)

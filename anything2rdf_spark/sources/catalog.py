@@ -20,8 +20,8 @@ versions: none)". Unchanged from the r5 check of 2026-08-17):
   and ``repo1.maven.org``, so neither ``pip download pyiceberg`` nor a
   direct runtime-jar fetch can succeed.
 The parquet stand-in keeps Iceberg's load-bearing properties: bucket
-partition layout, schema sidecar, atomic commit marker for idempotent
-resume, and per-partition lineage metrics on write.
+partition layout where a table asks for one, schema sidecar, atomic commit
+marker for idempotent resume, and per-partition lineage metrics on write.
 """
 
 from __future__ import annotations
@@ -43,11 +43,13 @@ def iceberg_available(spark: SparkSession) -> bool:
 class Catalog:
     """A stage-output catalog rooted at a warehouse directory.
 
-    Tables are written with ``bucket_col`` hashed into ``n_buckets``
-    partition directories — the parquet stand-in for Iceberg's
-    ``bucket(n, conv_id)`` partition transform (SURVEY §4.1 partitioning
-    row): co-locates each conversation's rows and bounds per-file size
-    under skew.
+    A table written with a ``bucket_col`` has that column hashed into
+    ``n_buckets`` partition directories — the parquet stand-in for
+    Iceberg's ``bucket(n, conv_id)`` partition transform (SURVEY §4.1
+    partitioning row): co-locates each conversation's rows and bounds
+    per-file size under skew. A table written without one is flat: one
+    file per non-empty partition of the DataFrame's plan, no shuffle.
+    ``Pipeline`` buckets only its final triple table.
     """
 
     def __init__(self, spark: SparkSession, warehouse: str, n_buckets: int = 32):
@@ -78,8 +80,10 @@ class Catalog:
         bucket_col: str | None = "conv_id",
         collect_partition_counts: bool = False,
     ) -> dict[int, int] | None:
-        """Write a checkpoint table. With ``collect_partition_counts`` the
-        per-bucket row counts come from the freshly-written parquet FOOTERS
+        """Write a checkpoint table, bucketed by ``bucket_col`` or flat when
+        it is None. With ``collect_partition_counts`` the per-partition row
+        counts (per bucket, or per write task of a flat table) come from the
+        freshly-written parquet FOOTERS
         — a metadata-only read (O(files), not O(rows)): no data-scan
         read-back (at 100 TB that's a full extra pass per stage), and no
         per-row observe aggregates either (r2 rode a 32-way ``count_if``
@@ -113,9 +117,11 @@ class Catalog:
         return None
 
     def _partition_counts_from_footers(self, table: str) -> dict[int, int]:
-        """Per-bucket row counts from parquet footer metadata (num_rows per
-        file, summed per pbucket directory). Unpartitioned tables report
-        bucket 0. Metadata-only: reads no row data."""
+        """Per-partition row counts from parquet footer metadata (num_rows
+        per file). A bucketed table sums each ``pbucket=`` directory; a flat
+        table keys each file by the write task number in its
+        ``part-NNNNN-…`` name, i.e. by the DataFrame partition that wrote
+        it. Metadata-only: reads no row data."""
         import glob
 
         import pyarrow.parquet as pq
@@ -133,12 +139,11 @@ class Catalog:
                 if n:
                     counts[b] = n
         else:
-            n = sum(
-                pq.ParquetFile(fp).metadata.num_rows
-                for fp in glob.glob(os.path.join(root, "*.parquet"))
-            )
-            if n:
-                counts[0] = n
+            for fp in glob.glob(os.path.join(root, "part-*.parquet")):
+                task = int(os.path.basename(fp).split("-", 2)[1])
+                n = pq.ParquetFile(fp).metadata.num_rows
+                if n:
+                    counts[task] = counts.get(task, 0) + n
         return counts
 
     def row_count(self, table: str) -> int:

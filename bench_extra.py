@@ -8,6 +8,7 @@ Usage (pin externally, e.g. `taskset -c 8-15 python bench_extra.py curate`):
     python bench_extra.py curate   # curate_corpus component breakdown
     python bench_extra.py emit     # extraction emit kernel variants
     python bench_extra.py scan     # mention scan kernel
+    python bench_extra.py plans OUT.txt  # stage-table write plans, sf0.001
 """
 
 from __future__ import annotations
@@ -124,6 +125,80 @@ def main_scan():
     spark.stop()
 
 
+def _write_plans(event_log: str, root: str) -> dict[str, str]:
+    """{table: final formatted plan} of every parquet write under
+    ``root``/wh in a Spark event log: the plan of the last adaptive update
+    of each SQL execution (the start event's plan when AQE never re-planned
+    it)."""
+    import re
+
+    plans: dict[int, str] = {}
+    with open(event_log) as f:
+        for line in f:
+            ev = json.loads(line)
+            if ev["Event"].endswith(("SQLExecutionStart", "SQLAdaptiveExecutionUpdate")):
+                plans[ev["executionId"]] = ev["physicalPlanDescription"]
+    out: dict[str, str] = {}
+    for _, text in sorted(plans.items()):
+        m = re.search(r"Arguments: file:" + re.escape(root) + r"/wh/(\w+),", text)
+        if m:
+            # expression ids, plan ids and the scratch root differ between
+            # runs
+            text = re.sub(r"#\d+", "#n", re.sub(r"plan_id=\d+", "plan_id=n", text))
+            out[m.group(1)] = text.replace("file:" + root, "<tmp>").replace(root, "<tmp>")
+    return out
+
+
+def main_plans():
+    """Formatted physical plans of the stage-table writes of one
+    ``Pipeline.run`` on bench.py's sf0.001 input (100 conversations), taken
+    from Spark's event log, written to the file named by argv[2]. Snapshots
+    live under plans/; diff two of them to see what a change did to a plan."""
+    import glob
+    import shutil
+    import tempfile
+
+    from anything2rdf_spark.plans.pipeline import Pipeline
+    from anything2rdf_spark.session import get_spark
+    from anything2rdf_spark.sources import synth
+
+    out_path = sys.argv[2]
+    tmp = tempfile.mkdtemp(prefix="a2r_bx_plans_")
+    logs = os.path.join(tmp, "eventlog")
+    os.makedirs(logs)
+    spark = get_spark(
+        master="local[4]", app_name="a2r-bx-plans", shuffle_partitions=4,
+        extra_conf={
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": logs,
+            "spark.eventLog.rolling.enabled": "false",
+            "spark.eventLog.compress": "false",
+        },
+    )
+    try:
+        inp = os.path.join(tmp, "transcripts")
+        synth.transcripts(spark, n_convs=100, seed=42).repartition(32).write.parquet(inp)
+        Pipeline(spark, os.path.join(tmp, "wh"), n_buckets=32).run(
+            transcripts=spark.read.parquet(inp),
+            dictionary=synth.entity_dictionary(spark),
+            code_tables=synth.code_tables(spark),
+            alias_edges=synth.alias_edges(spark, big_chain=2000),
+            dictionary_surfaces=synth.ALL_MENTION_NAMES,
+            force=True,
+        )
+    finally:
+        spark.stop()
+    try:
+        (log,) = glob.glob(os.path.join(logs, "*"))
+        plans = _write_plans(log, tmp)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    with open(out_path, "w") as f:
+        for table, text in plans.items():
+            f.write(f"==== {table} ====\n{text.rstrip()}\n\n")
+    print(json.dumps({"plans": out_path, "tables": list(plans)}), flush=True)
+
+
 if __name__ == "__main__":
     which = sys.argv[1] if len(sys.argv) > 1 else "curate"
-    {"curate": main_curate, "emit": main_emit, "scan": main_scan}[which]()
+    {"curate": main_curate, "emit": main_emit, "scan": main_scan, "plans": main_plans}[which]()

@@ -129,3 +129,24 @@ def test_degree_merge_duplicate_edges_and_null_names(spark):
                edges, "client", "person", "lname", "rname").collect()}
     assert out[("c1", "p1")] is True
     assert out[("c2", "p2")] is False  # False, not None
+
+
+def test_connected_components_shuffled_chain(spark):
+    """A chain whose ids are out of order needs several rounds; every
+    round's checkpoint must start from a fresh size estimate. Inherited,
+    the estimate compounded across rounds and planning a 10-node chain's
+    third round did not finish in 300 s."""
+    import random
+    import time
+
+    ids = [f"n{i:02d}" for i in range(16)]
+    random.Random(7).shuffle(ids)
+    pairs = [(ids[i], ids[i + 1]) for i in range(len(ids) - 1)]
+    edges = spark.createDataFrame(pairs, "src_id string, dst_id string")
+    t0 = time.time()
+    got = {
+        r["node_id"]: r["canonical_id"] for r in CN.connected_components(edges).collect()
+    }
+    assert time.time() - t0 < 120
+    assert got == py_union_find(pairs)
+

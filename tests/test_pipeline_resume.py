@@ -1,6 +1,7 @@
 """Pipeline end-to-end + idempotent-resume tests (SURVEY §5.2 item 3:
 kill after stage k, re-run, byte-identical output)."""
 
+import os
 import shutil
 
 import pytest
@@ -89,11 +90,28 @@ def test_lineage_metrics_recorded(spark, tmp_path, inputs):
     rows = p.registry.metrics()
     stages = {r["stage"] for r in rows}
     assert stages == {"normalize", "extract", "link", "canonicalize", "materialize"}
-    # per-partition rows present
-    assert any(r["partition_id"] is not None for r in rows)
     # stage-level rows carry wall_ms and rows_out
     done = [r for r in rows if r["partition_id"] is None]
     assert all(r["wall_ms"] is not None and r["rows_out"] is not None for r in done)
+    # every stage records one row per written partition of its primary
+    # table — flat transient tables by write task, the final table by
+    # bucket — and they add up to the stage's rows_out
+    for r in done:
+        parts = [
+            x["rows_out"] for x in rows
+            if x["stage"] == r["stage"] and x["partition_id"] is not None
+        ]
+        assert parts, r["stage"]
+        assert sum(parts) == r["rows_out"] > 0, r["stage"]
+    # only the final triple table is hash-bucketed; the transient stage
+    # tables are written flat, as their plans produce them
+    bucketed = {
+        t for t in os.listdir(wh)
+        if os.path.isdir(os.path.join(wh, t))
+        and any(d.startswith("pbucket=") for d in os.listdir(os.path.join(wh, t)))
+    }
+    assert bucketed == {"triples"}
+    assert p.catalog.row_count("triples") == p.triples().count()
 
 
 def test_pipeline_non_default_ns(spark, tmp_path, inputs):

@@ -73,6 +73,33 @@ def test_dictionary_link_broadcasts(spark, transcripts):
     assert "Exchange hashpartitioning" not in p
 
 
+# plan budget for the small-dictionary mention path: no Python
+# evaluation node and no scan of a driver-built RDD (a local list turned
+# into a DataFrame); either one starts Python workers
+PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "Scan ExistingRDD")
+
+
+@pytest.fixture(scope="module")
+def dictionary(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("plans") / "d.parquet")
+    synth.entity_dictionary(spark).write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_small_dictionary_mention_path_runs_without_python(spark, transcripts, dictionary):
+    """With a dictionary of at most AC_THRESHOLD surfaces, mention
+    extraction, the surface index and linking plan no Python node: the scan
+    is a native regex and NFC a JVM call."""
+    from anything2rdf_spark.functions.text import AC_THRESHOLD
+
+    surfaces = sorted(set(synth.ALL_MENTION_NAMES))
+    assert len(surfaces) <= AC_THRESHOLD
+    mentions = EX.extract_mentions(transcripts, spark.sparkContext.broadcast(surfaces))
+    for df in (mentions, LK.surface_index(dictionary), LK.link_mentions(mentions, dictionary)):
+        p = plan(df)
+        assert not [n for n in PYTHON_NODES if n in p], p
+
+
 def test_rewrite_triples_join_strategy_policy(spark):
     """broadcast_map=True plans a broadcast join; False plans a shuffle join
     (the entity-scale path where the canonical map exceeds broadcast range)."""

@@ -57,6 +57,36 @@ def test_nfc_normalize(spark):
     assert got[0] == "étude" and got[1] is None
 
 
+def test_nfc_normalize_matches_unicodedata(spark):
+    """The native NFC (ICU4J's ``Normalizer.compose`` on the JVM) equals
+    Python's ``unicodedata.normalize("NFC")``, kept here as the reference.
+    NFC follows the JVM's ICU Unicode version, so the inputs use only
+    characters assigned in Python's (older) Unicode version."""
+    import unicodedata
+
+    cases = [
+        "a\u0323\u0302",  # combining marks in non-canonical order -> ậ
+        "a\u0302\u0323",  # the same marks in canonical order -> ậ
+        "e\u0301tude",  # decomposed é
+        "\u1100\u1161\u11a8",  # Hangul jamo L V T -> 각
+        "\u1100\u1161",  # Hangul jamo L V -> 가
+        "\u212b",  # ANGSTROM SIGN singleton -> Å
+        "\u2126",  # OHM SIGN singleton -> Ω
+        "\ufb01",  # ﬁ ligature: compatibility only, NFC keeps it
+        "\u00bd \u2460 \uff21 \u2075",  # ½ ① Ａ ⁵: compatibility only
+        "\u00c5ngstr\u00f6m",  # already NFC
+        "",
+        None,
+    ]
+    df = spark.createDataFrame([(i, c) for i, c in enumerate(cases)], "i int, s string")
+    got = {r["i"]: r["v"] for r in df.select("i", TX.nfc_normalize("s").alias("v")).collect()}
+    for i, c in enumerate(cases):
+        want = None if c is None else unicodedata.normalize("NFC", c)
+        assert got[i] == want, (i, c, got[i], want)
+    # the cases do exercise composition: NFC changes most of them
+    assert sum(got[i] != c for i, c in enumerate(cases)) == 7
+
+
 def test_norm_surface(spark):
     df = spark.createDataFrame([("  --Ada   LOVELACE!  ",)], "s string")
     got = df.select(TX.norm_surface("s").alias("v")).collect()[0]["v"]
