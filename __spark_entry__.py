@@ -1639,8 +1639,9 @@ FROM (SELECT DISTINCT query_id FROM q) qq LEFT JOIN hits h USING (query_id)
 """
 
 
-# kg_mentions_pandas_udf — the Arrow-batched mention scan itself (E8 /
-# north-star extraction core), now with a DuckDB regex oracle
+# kg_mentions_pandas_udf — the mention scan itself (E8 / north-star
+# extraction core; a native JVM regex now, the name kept for the query
+# list), with a DuckDB regex oracle
 def _kg_mentions_spark(spark: SparkSession) -> DataFrame:
     t = spark.table("transcripts")
     return EX.extract_mentions(t, _MENTION_SURFACES).select(

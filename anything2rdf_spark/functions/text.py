@@ -1,14 +1,17 @@
 """Text scalar kernel (SURVEY §2.4 F1-F11, F21-F27).
 
-Native Column expressions wherever possible, Unicode NFC included (a JVM
-call into the ICU4J that ships with Spark). The one Python piece left is
-the large-dictionary mention scan, an Arrow-vectorized pandas UDF operating
-on whole batches — never a per-row Python UDF (input_hint mandate).
+Native Column expressions wherever possible: Unicode NFC is a JVM call
+into the ICU4J that ships with Spark, and the dictionary mention scan is
+one JVM regex at every dictionary size. The one Python piece left is the
+MediaWiki template parser, an Arrow-vectorized pandas UDF operating on
+whole batches — never a per-row Python UDF (input_hint mandate).
 """
 
 from __future__ import annotations
 
+import json
 import re
+import zlib
 
 import pandas as pd
 from pyspark.sql import Column
@@ -59,8 +62,9 @@ def expand_abbreviations(col: Column | str, abbrevs: dict[str, str]) -> Column:
     """Fold a regex dictionary over text — mention normalization
     (grandtourcsv2rdf.scala:45-46, 91-93: ``\\bABBR(?=\\s|$)`` → expansion).
     Generated as a chain of native ``regexp_replace`` (JVM-side), one per
-    dictionary entry — fine for small dictionaries; use
-    ``mention_scan_udf`` for large ones."""
+    dictionary entry — fine for small dictionaries. To find (not rewrite)
+    the entries of a large dictionary, use :func:`mention_matches`, one
+    scan whatever its size."""
     out = _c(col)
     for abbr, expansion in abbrevs.items():
         out = F.regexp_replace(out, rf"\b{re.escape(abbr)}(?=\s|$)", expansion)
@@ -212,257 +216,98 @@ def parse_wiki_templates_udf():
     return parse
 
 
-class AhoCorasick:
-    """Multi-pattern string automaton (Aho-Corasick 1975, public algorithm).
-
-    Built once per executor process from the (broadcast) surface list —
-    O(total pattern length) construction, O(text length) scan — replacing
-    the single alternation regex that dies at 10⁵-10⁶ dictionary surfaces
-    (compile time and per-position alternation cost both explode)."""
-
-    __slots__ = ("goto", "fail", "out")
-
-    def __init__(self, patterns: list[str]):
-        self.goto: list[dict[str, int]] = [{}]
-        self.out: list[list[int]] = [[]]
-        for p in patterns:
-            node = 0
-            for ch in p:
-                nxt = self.goto[node].get(ch)
-                if nxt is None:
-                    self.goto.append({})
-                    self.out.append([])
-                    nxt = len(self.goto) - 1
-                    self.goto[node][ch] = nxt
-                node = nxt
-            if p:
-                self.out[node].append(len(p))
-        from collections import deque
-
-        self.fail = [0] * len(self.goto)
-        dq = deque(self.goto[0].values())
-        while dq:
-            u = dq.popleft()
-            for ch, v in self.goto[u].items():
-                dq.append(v)
-                f = self.fail[u]
-                while f and ch not in self.goto[f]:
-                    f = self.fail[f]
-                cand = self.goto[f].get(ch, 0)
-                self.fail[v] = cand if cand != v else 0
-                self.out[v] = self.out[v] + self.out[self.fail[v]]
-
-    def find_all(self, text: str):
-        """All (start, end) occurrences of any pattern in text."""
-        node = 0
-        goto, fail, out = self.goto, self.fail, self.out
-        for j, ch in enumerate(text):
-            while node and ch not in goto[node]:
-                node = fail[node]
-            node = goto[node].get(ch, 0)
-            for ln in out[node]:
-                yield (j - ln + 1, j + 1)
+def _rx_char(c: str) -> str:
+    """One character as a Java regex literal, in or out of a character
+    class: ASCII punctuation gets a backslash (legal before any
+    non-alphabetic character); letters, digits and non-ASCII stand as
+    themselves."""
+    return "\\" + c if c < "\x80" and not c.isalnum() else c
 
 
-def _isword(ch: str) -> bool:
-    # Python \w ≈ alnum + underscore (tested equivalent on our corpora)
-    return ch.isalnum() or ch == "_"
-
-
-def _ac_scan_text(text: str, ac: AhoCorasick, canon: dict[str, str]) -> list[str]:
-    """Emulate the alternation regex's leftmost / longest-alternative-first /
-    non-overlapping / word-boundary scan over an AC match set."""
-    tl = text.lower()
-    n = len(tl)
-    matches = sorted(ac.find_all(tl), key=lambda m: (m[0], -(m[1] - m[0])))
-    res: list[str] = []
-    cursor = 0
-    for s, e in matches:
-        if s < cursor:
+def _prefix_alternation(words: list[str]) -> str:
+    """Java regex alternation of ``words`` (sorted, distinct, non-empty)
+    factored into a prefix tree: ``["ab", "abc", "ad"]`` →
+    ``a(?:b(?:c)?|d)``. At each node the child branches come first and the
+    end-of-word branch last (the greedy ``?``); at most one child can match
+    the next character, so backtracking yields the longest word the rest
+    of the pattern accepts, exactly as a flat alternation ordered
+    longest-first. A node is a range of the sorted list sharing its first
+    ``d`` characters, walked with an explicit stack: label length does not
+    bound recursion."""
+    out: list[str] = []
+    stack: list = [(0, len(words), 0)]
+    while stack:
+        item = stack.pop()
+        if isinstance(item, str):
+            out.append(item)
             continue
-        # \b = word-ness transition (out of range counts as non-word)
-        left_ok = _isword(tl[s]) != (s > 0 and _isword(tl[s - 1]))
-        right_ok = _isword(tl[e - 1]) != (e < n and _isword(tl[e]))
-        if not (left_ok and right_ok):
-            continue
-        res.append(canon[tl[s:e]])
-        cursor = e
-    return res
+        lo, hi, d = item
+        end = len(words[lo]) == d  # the shared prefix itself is a word
+        lo += end
+        ops: list = []
+        while lo < hi:
+            c, nxt = words[lo][d], lo + 1
+            while nxt < hi and words[nxt][d] == c:
+                nxt += 1
+            ops += ["|"] * bool(ops) + [_rx_char(c), (lo, nxt, d + 1)]
+            lo = nxt
+        if ops and (end or len(ops) > 2):
+            ops = ["(?:", *ops, ")?" if end else ")"]
+        stack.extend(reversed(ops))
+    return "".join(out)
 
 
-# per-executor-process scanner cache: module-level so it survives across
-# tasks within one Python worker (the closure itself is re-pickled per task).
-# Keyed by a content fingerprint of (surfaces, engine) so identical
-# dictionaries share one automaton across pipeline runs, and bounded so a
-# long-lived worker seeing many distinct dictionaries can't accumulate
-# unbounded compiled state.
-_SCANNER_CACHE: dict = {}
-_SCANNER_CACHE_MAX = 4
+def mention_matches(text: Column | str, surfaces) -> Column:
+    """Array-of-mentions Column for a fixed surface dictionary (the
+    turn-level extractor, SURVEY §2.12 ext-point 1; the analog of
+    andcsv2rdf.scala:43-47 name mentions and the grandtour regex dictionary
+    F9): the matched surfaces in dictionary casing, leftmost,
+    longest-first, non-overlapping, at word boundaries. NULL and empty
+    surfaces are dropped; an empty dictionary scans to ``[]``.
 
-AC_THRESHOLD = 256  # alternation regex is faster below this dictionary size
+    Fully native at every dictionary size: one JVM ``regexp_extract_all``
+    over the lowered text, then a map lookup back to dictionary casing, so
+    no Python worker or Arrow boundary is involved and the scan stays in
+    the codegen span of the extraction. The alternation is a prefix tree of
+    the lowered surfaces (:func:`_prefix_alternation`), so its size grows
+    with the dictionary's distinct prefixes instead of a flat list tried
+    one by one. ``(?U)`` makes Java's ``\\b`` Unicode-aware like Python
+    ``re``'s. A zero-width first-character class rejects most positions in
+    one bitmap test; it cannot change the match set. Lowering both sides
+    (not ``(?i)``) keeps plain-lowercase semantics: micro sign µ does not
+    match Greek μ. Surfaces sharing a lowercase form map to the last of
+    them in ``(-len, s)`` order. The canon map travels as one JSON literal
+    that constant-folds, however large the dictionary.
 
-
-def _surfaces_fingerprint(surfaces, engine: str) -> str:
-    """Stable content key for the scanner cache: md5 over the sorted surface
-    set + engine choice. Computed once on the driver (the surface list is
-    already driver-resident there — either a plain list or the broadcast's
-    local value)."""
-    import hashlib
-
-    h = hashlib.md5()
-    h.update(engine.encode())
-    for s in sorted(set(surfaces)):
-        h.update(b"\x00")
-        h.update(s.encode("utf-8", "surrogatepass"))
-    return h.hexdigest()
-
-
-def _java_quote(s: str) -> str:
-    """Quote a literal for a Java regex via \\Q...\\E (splitting any embedded
-    \\E so it cannot terminate the quote early)."""
-    return "\\Q" + s.replace("\\E", "\\E\\\\E\\Q") + "\\E"
-
-
-def mention_matches(text, surfaces, engine: str = "auto"):
-    """Array-of-mentions Column for a fixed surface dictionary — the
-    entry point extract_mentions / extract_triples route through.
-
-    Small dictionaries (≤ AC_THRESHOLD distinct surfaces) run FULLY NATIVE
-    (round-6 optimization): one JVM ``regexp_extract_all`` over the lowered
-    text with the same longest-alternative-first literal alternation the
-    'regex' engine compiles, then a literal-map lookup back to canonical
-    dictionary casing — no Python worker, no Arrow boundary, and the scan
-    stays inside the same whole-stage-codegen span as the rest of the
-    extraction (the 'regex'/'aho' pandas UDFs put an ArrowEvalPython node
-    over the full text column). Semantics are pinned identical to the
-    'regex' engine by tests (leftmost, longest-alternative-first,
-    non-overlapping, word-boundary): the alternation is ordered by
-    (-len, s) exactly as the UDF engines order it, ``(?U)`` makes Java's
-    ``\\b`` Unicode-aware like Python ``re``'s, alternatives are
-    ``\\Q``-quoted literals so the matched substring always equals one
-    alternative verbatim, and the canon map is built with the same
-    last-writer-wins rule over the same surface ordering. Large
-    dictionaries keep the Aho-Corasick Arrow path (a 10⁵-alternative regex
-    is quadratic; the automaton is not).
+    ``surfaces`` is a list of strings; a pyspark ``Broadcast`` of one is
+    read through its driver-side value.
     """
     t = _c(text)
-    surfs_local = surfaces.value if hasattr(surfaces, "value") else surfaces
-    eng = engine
-    if eng == "auto":
-        eng = "native" if len(set(surfs_local)) <= AC_THRESHOLD else "aho"
-    if eng != "native":
-        return mention_scan_udf(surfaces, engine=eng)(t)
-    ordered = sorted(set(surfs_local), key=lambda s: (-len(s), s))
+    surfs = surfaces.value if hasattr(surfaces, "value") else surfaces
+    ordered = sorted({s for s in surfs if s}, key=lambda s: (-len(s), s))
     if not ordered:
         return F.array().cast("array<string>")
     canon = {s.lower(): s for s in ordered}
-    lowered = sorted({s.lower() for s in ordered}, key=lambda s: (-len(s), s))
-    # zero-width first-char gate: Java tries alternation branches
-    # sequentially at every position that passes \b, so a position whose
-    # char starts NO alternative costs ~|alternatives| failed compares; the
-    # lookahead class rejects it in one bitmap test. Zero-width => the
-    # match set is identical (a match requires its first char to be in the
-    # class by construction). Measured ~1.5x on the 24-surface scan.
-    first_chars = "".join(
-        c if c.isalnum() else "\\" + c for c in sorted({s[0] for s in lowered})
-    )
+    words = sorted(canon)
     pattern = (
-        "(?U)\\b(?=[" + first_chars + "])("
-        + "|".join(_java_quote(s) for s in lowered)
-        + ")\\b"
+        "(?U)\\b(?=[" + "".join(_rx_char(c) for c in sorted({w[0] for w in words}))
+        + "])(" + _prefix_alternation(words) + ")\\b"
     )
-    canon_args: list[Column] = []
-    for k in sorted(canon):
-        canon_args.append(F.lit(k))
-        canon_args.append(F.lit(canon[k]))
-    canon_map = F.create_map(*canon_args)
+    # a map lookup scans its keys, so the canon map is split into buckets
+    # of ~8 keys by the CRC-32 of the key's UTF-8 bytes, which Python's
+    # zlib and Spark's crc32 compute alike
+    n_buckets = max(1, len(canon) // 8)
+    buckets: list[dict[str, str]] = [{} for _ in range(n_buckets)]
+    for k, v in canon.items():
+        buckets[zlib.crc32(k.encode("utf-8")) % n_buckets][k] = v
+    canon_maps = F.from_json(F.lit(json.dumps(buckets)), "array<map<string,string>>")
     matches = F.regexp_extract_all(F.lower(t), F.lit(pattern), 1)
-    # every match equals one lowered alternative verbatim (literal
-    # alternation), so the lookup always hits; try_element_at only for
-    # ANSI-mode safety. NULL text lowers to NULL -> NULL matches -> [] ,
-    # the same [] the UDF engines' fillna('') produces.
+    # every match is one lowered surface, so the lookup always hits;
+    # try_element_at only for ANSI-mode safety. NULL text lowers to NULL
+    # matches, coalesced to [].
     return F.coalesce(
-        F.transform(matches, lambda m: F.try_element_at(canon_map, m)),
+        F.transform(matches, lambda m: F.try_element_at(
+            F.element_at(canon_maps, F.pmod(F.crc32(m), F.lit(n_buckets)).cast("int") + 1), m
+        )),
         F.array().cast("array<string>"),
     )
-
-
-def mention_scan_udf(surfaces, engine: str = "auto"):
-    """Build an Arrow-vectorized mention scanner for a fixed surface-form
-    dictionary (the engine's turn-level extractor, SURVEY §2.12 ext-point 1;
-    semantics: word-boundary, case-insensitive, longest-match-first — the
-    analog of andcsv2rdf.scala:43-47 name mentions + grandtour regex
-    dictionary F9).
-
-    ``surfaces`` is a plain list OR a pyspark ``Broadcast`` of one (pass a
-    broadcast for big dictionaries so the list ships once per executor, not
-    once per task). Engine selection: small dictionaries scan with one
-    compiled alternation regex (``pd.Series.str.findall`` runs in C); above
-    ``AC_THRESHOLD`` surfaces an Aho-Corasick automaton is built once per
-    executor process (regex compile + per-position alternation both die at
-    10⁵-10⁶ surfaces). Both engines produce identical output
-    (test-enforced): array<string> of matched surface forms in original
-    dictionary casing, leftmost-longest, non-overlapping.
-    """
-    bc = surfaces if hasattr(surfaces, "value") else None
-    # tie-break equal lengths lexicographically: a bare key=len sort leaves
-    # equal-length order to set iteration (hash-randomized per process), so
-    # case-variant surfaces sharing a lowercase key could canonicalize
-    # differently on different executors within ONE run
-    local = (
-        None if bc is not None else sorted(set(surfaces), key=lambda s: (-len(s), s))
-    )
-    # content-keyed cache slot (minted on the driver, stable across all
-    # tasks of this UDF AND across re-invocations with the same dictionary)
-    # — the automaton builds once per executor per distinct dictionary
-    cache_key = _surfaces_fingerprint(bc.value if bc is not None else local, engine)
-
-    def _build():
-        surfs = (
-            sorted(set(bc.value), key=lambda s: (-len(s), s))
-            if bc is not None
-            else local
-        )
-        if not surfs:
-            # an empty dictionary must scan to nothing: the alternation
-            # regex would otherwise degenerate to \b()\b, whose empty-string
-            # matches KeyError on canon lookup
-            return lambda texts: texts.fillna("").map(lambda _t: [])
-        eng = engine
-        if eng == "auto":
-            eng = "aho" if len(surfs) > AC_THRESHOLD else "regex"
-        canon = {s.lower(): s for s in surfs}
-        if eng == "regex":
-            # scan the LOWERED text with a lowered pattern instead of
-            # re.IGNORECASE: IGNORECASE uses full Unicode case-folding
-            # (µ≡μ, ς≡σ), which both KeyErrors on the .lower()-keyed canon
-            # map for such matches AND disagrees with the AC engine's
-            # plain-lowercase semantics — lowering both sides keeps the two
-            # engines identical by construction
-            lowered = sorted({s.lower() for s in surfs}, key=lambda s: (-len(s), s))
-            pattern = re.compile(
-                r"\b(" + "|".join(re.escape(s) for s in lowered) + r")\b"
-            )
-
-            def scan_series(texts: pd.Series) -> pd.Series:
-                found = texts.fillna("").str.lower().str.findall(pattern)
-                return found.map(lambda ms: [canon[m] for m in ms])
-
-        else:
-            ac = AhoCorasick(sorted({s.lower() for s in surfs}))
-
-            def scan_series(texts: pd.Series) -> pd.Series:
-                return texts.fillna("").map(lambda t: _ac_scan_text(t, ac, canon))
-
-        return scan_series
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def scan(texts: pd.Series) -> pd.Series:
-        fn = _SCANNER_CACHE.get(cache_key)
-        if fn is None:
-            while len(_SCANNER_CACHE) >= _SCANNER_CACHE_MAX:
-                _SCANNER_CACHE.pop(next(iter(_SCANNER_CACHE)))
-            fn = _SCANNER_CACHE.setdefault(cache_key, _build())
-        return fn(texts)
-
-    return scan

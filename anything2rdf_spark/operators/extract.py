@@ -10,9 +10,8 @@ semantics, Anything2RDF.scala:126-144 / SURVEY A6).
 Rule model: each emission rule is a nullable struct inside one array column;
 ``explode`` + null-filter turns a turn-row into 5-10 triple rows. All guards
 are native ``when`` expressions (ANE semantics, Anything2RDF.scala:101-107).
-Mention detection is native up to ``functions.text.AC_THRESHOLD`` surfaces;
-larger dictionaries scan in an Arrow-batched Aho-Corasick pandas UDF
-(functions.text.mention_scan_udf) — never per-row Python.
+Mention detection is one native JVM regex scan at every dictionary size
+(functions.text.mention_matches): no Python worker on this stage.
 """
 
 from __future__ import annotations
@@ -98,8 +97,8 @@ def extract_triples(transcripts: DataFrame, ns: str = NS, dictionary_surfaces=No
     (separator-count semantics, OBCXML2RDF.scala:210), hasSpeaker +
     speaker rdf:type + hasRole code link, usedTool (ANE guard on nullable
     tool), atTime (xsd:dateTime), conversation rdf:type, and — when a
-    dictionary is supplied — mentionsSurface triples from the Arrow-batched
-    scan (andcsv2rdf.scala:43-47 analog).
+    dictionary is supplied — mentionsSurface triples from the native
+    mention scan (andcsv2rdf.scala:43-47 analog).
     """
     # Hoist every subexpression the rules share into ONE projection below
     # the explode (round-6 optimization; guide §1.2 per-task work).
@@ -182,7 +181,7 @@ def extract_triples(transcripts: DataFrame, ns: str = NS, dictionary_surfaces=No
         .select(*TRIPLE_COLS)
     )
 
-    # truthiness: an empty surface list skips the scan; a Broadcast is truthy
+    # an empty surface list skips the scan
     if dictionary_surfaces:
         mention_triples = (
             adm.select(
@@ -208,15 +207,14 @@ def extract_triples(transcripts: DataFrame, ns: str = NS, dictionary_surfaces=No
 def extract_mentions(transcripts: DataFrame, dictionary_surfaces) -> DataFrame:
     """Transcripts → mention rows (conv_id, turn_idx, surface, norm_surface)
     for the linking stage — the turn-level extractor extension point
-    (SURVEY §2.12). ``dictionary_surfaces``: list[str] or a Broadcast of one
+    (SURVEY §2.12). ``dictionary_surfaces``: list[str]
     (see functions.text.mention_matches).
 
     norm_surface is computed on each mention row by the same native
     :func:`~anything2rdf_spark.functions.text.norm_surface` expression that
     normalizes the dictionary labels in linking, so the two sides agree by
-    construction. With a small dictionary (the native scan) the whole
-    relation is one narrow projection over the scan: no Python worker, no
-    join."""
+    construction. At any dictionary size the whole relation is one narrow
+    projection over the scan: no Python worker, no join."""
     return admissible(transcripts).select(
         "conv_id",
         "turn_idx",
@@ -236,8 +234,8 @@ def extract_mentions_join(
     transcripts: DataFrame, surfaces: DataFrame, surface_col: str = "surface"
 ) -> DataFrame:
     """Join-based mention extraction — the engine for dictionaries too large
-    to broadcast (10⁷+ surface forms), where the scan engine's
-    driver-collected list / per-executor automaton stops being viable.
+    to collect (10⁷+ surface forms), where the scan's driver-collected
+    list and driver-built regex stop being viable.
     NOTHING is ever materialized on the driver: the dictionary stays a
     DataFrame end to end.
 
@@ -245,7 +243,7 @@ def extract_mentions_join(
     leftmost-longest fold, all native exprs):
 
     1. tokenize each turn into word tokens (unicode ``\\W+`` split, the
-       token-level analog of the scan engines' ``\\b`` boundaries);
+       token-level analog of the scan's ``\\b`` boundaries);
     2. join each (turn, token position) against the surface index keyed on
        the surface's FIRST token — the one shuffle; a big dictionary is just
        a bigger join side, planned by AQE (skew-join absorbs a hot first
@@ -254,10 +252,10 @@ def extract_mentions_join(
        surface's token sequence;
     4. per turn, fold the verified candidate spans left-to-right with a
        native ``aggregate``: sort by (position, longest-first), keep a span
-       when it starts at/after the cursor — exactly the scan engines'
+       when it starts at/after the cursor — exactly the scan's
        leftmost-longest non-overlapping selection, in token space.
 
-    Semantics vs the scan engines: matching is on token sequences, so it is
+    Semantics vs the scan: matching is on token sequences, so it is
     punctuation/whitespace-run insensitive ("New  York" matches surface
     "New York"). On texts and surfaces with single-space word separation the
     output equals ``extract_mentions`` (test-enforced, including overlap
@@ -275,7 +273,7 @@ def extract_mentions_join(
             F.size("_stoks").alias("_ntok"),
         )
         # one winner per distinct token sequence (deterministic min surface:
-        # the scan engines' canon-casing map, made order-independent)
+        # the scan's canon-casing map, made order-independent)
         .groupBy("_skey", "_tok", "_ntok")
         .agg(F.min("_surface").alias("_surface"))
         # norm once per distinct surface (dictionary-sized relation) instead

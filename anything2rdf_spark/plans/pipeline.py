@@ -135,9 +135,9 @@ class Pipeline:
         def extract():
             # Surface materialization happens INSIDE the stage closure so a
             # fully-resumed run (stage skipped) never pays the dictionary
-            # collect/broadcast.
+            # collect.
             if mention_engine == "join":
-                # dictionary too big to broadcast (10⁷+ surfaces): the
+                # dictionary too big to collect (10⁷+ surfaces): the
                 # surface relation stays a DataFrame end to end —
                 # token-index join + span verify (extract_mentions_join);
                 # nothing on the driver
@@ -147,7 +147,6 @@ class Pipeline:
                         dictionary.select(F.explode("alt_labels").alias("surface"))
                     )
                 )
-                surfaces_bc = None
             else:
                 surfaces = dictionary_surfaces
                 if surfaces is None:
@@ -157,12 +156,8 @@ class Pipeline:
                         r["a"]
                         for r in dictionary.select(F.explode("alt_labels").alias("a")).collect()
                     ]
-                # one broadcast per run: the surface list ships once per
-                # executor (not once per task via closure); up to
-                # AC_THRESHOLD surfaces the scan is a native JVM regex, above
-                # it an Aho-Corasick automaton built once per executor
-                # process from the broadcast
-                surfaces_bc = self.spark.sparkContext.broadcast(list(surfaces))
+                # the list is compiled into the plan (one native regex plus
+                # a literal canon map); nothing reads it on the executors
             norm = cat.read("transcripts_norm")
             triples = EX.extract_triples(norm, ns=self.ns)
             if code_tables is not None:
@@ -174,7 +169,7 @@ class Pipeline:
             mentions = (
                 EX.extract_mentions_join(norm, surfaces_df)
                 if mention_engine == "join"
-                else EX.extract_mentions(norm, surfaces_bc)
+                else EX.extract_mentions(norm, surfaces)
             )
             return {
                 "triples_candidate": triples,

@@ -7,7 +7,7 @@ Usage (pin externally, e.g. `taskset -c 8-15 python bench_extra.py curate`):
 
     python bench_extra.py curate   # curate_corpus component breakdown
     python bench_extra.py emit     # extraction emit kernel variants
-    python bench_extra.py scan     # mention scan kernel
+    python bench_extra.py scan     # mention scan at 10^2..10^5 surfaces
     python bench_extra.py plans OUT.txt  # stage-table write plans, sf0.001
 """
 
@@ -109,20 +109,56 @@ def main_emit():
     spark.stop()
 
 
+SCAN_SIZES = (100, 1_000, 10_000, 100_000)
+
+
 def main_scan():
+    """Scaling of the native mention scan with dictionary size:
+    ``extract_mentions`` over 2,000 synth conversations whose turns each
+    name one synthetic surface, at each of ``SCAN_SIZES`` surfaces (the 24
+    stock names plus ``entity{i:05d} name{i % 97}``). Per size, one JSON
+    line: the expression build (Python-side alternation and canon map,
+    py4j, analysis), the planning (optimizer and physical plan) and the
+    best of two noop executions."""
+    import shutil
+    import tempfile
+
     from anything2rdf_spark.operators.extract import extract_mentions
     from anything2rdf_spark.session import get_spark
     from anything2rdf_spark.sources import synth
 
-    master = os.environ.get("BX_MASTER", "local[4]")
-    n = int(master[master.find("[") + 1 : master.find("]")])
-    rep = int(os.environ.get("BX_REPLICATE", "12"))
-    spark = get_spark(master=master, app_name="a2r-bx-scan", shuffle_partitions=n)
-    base, ts = bench_input(spark, replicate=rep)
-    warm = base.filter(F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(40)) == 0)
-    extract_mentions(warm, synth.ALL_MENTION_NAMES).count()
-    timed(spark, f"scan_count_{master}_rep{rep}", extract_mentions(ts, synth.ALL_MENTION_NAMES), action="count")
-    spark.stop()
+    spark = get_spark(master="local[4]", app_name="a2r-bx-scan", shuffle_partitions=4)
+    tmp = tempfile.mkdtemp(prefix="a2r_bx_scan_")
+    try:
+        for n in SCAN_SIZES:
+            i = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(n - 24))
+            path = os.path.join(tmp, f"t{n}")
+            synth.transcripts(spark, n_convs=2000, seed=42).withColumn(
+                "text",
+                F.concat(
+                    "text", F.lit(" about entity"), F.lpad(i.cast("string"), 5, "0"),
+                    F.lit(" name"), F.pmod(i, F.lit(97)).cast("string"),
+                ),
+            ).write.parquet(path)
+            ts = spark.read.parquet(path)
+            surfaces = list(synth.ALL_MENTION_NAMES) + [
+                f"entity{k:05d} name{k % 97}" for k in range(n - 24)
+            ]
+            t0 = time.time()
+            df = extract_mentions(ts, surfaces)
+            build_s = time.time() - t0
+            t0 = time.time()
+            df._jdf.queryExecution().executedPlan()  # noqa: SLF001
+            plan_s = time.time() - t0
+            noop(df)  # warm-up: JIT and the per-task pattern compile path
+            best = timed(spark, f"scan_noop_{n}", df)
+            print(json.dumps({
+                "surfaces": n, "build_s": round(build_s, 2), "plan_s": round(plan_s, 2),
+                "noop_s": best, "mentions": df.count(),
+            }), flush=True)
+    finally:
+        spark.stop()
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _write_plans(event_log: str, root: str) -> dict[str, str]:

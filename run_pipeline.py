@@ -43,8 +43,8 @@ def main(argv: list[str] | None = None) -> int:
         dest="mention_engine",
         choices=["scan", "join"],
         default="scan",
-        help="scan = broadcast dictionary + Arrow regex/Aho-Corasick; "
-        "join = token-index join for dictionaries too large to broadcast",
+        help="scan = driver-collected dictionary + native JVM regex scan; "
+        "join = token-index join for dictionaries too large to collect",
     )
     ap.add_argument(
         "--broadcast-map-max-rows",

@@ -108,14 +108,13 @@ def test_transcripts_generator_contract(spark):
 
 def test_empty_surface_dictionary_scans_to_nothing(spark):
     """An empty dictionary must produce zero mentions, not a degenerate
-    \\b()\\b alternation whose empty matches KeyError inside the UDF —
-    both as a plain list and as a broadcast (the pipeline's path)."""
+    \\b()\\b alternation that matches the empty string — also when its
+    only labels are empty or NULL."""
     from anything2rdf_spark.sources import synth
 
     ts = synth.transcripts(spark, n_convs=3, seed=52)
     assert EX.extract_mentions(ts, []).count() == 0
-    bc = spark.sparkContext.broadcast([])
-    assert EX.extract_mentions(ts, bc).count() == 0
+    assert EX.extract_mentions(ts, ["", None]).count() == 0
 
 
 def test_attime_literal_is_utc_under_any_session_tz(spark):

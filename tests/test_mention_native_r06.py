@@ -1,13 +1,14 @@
-"""Round-6 optimization guard: the fully-native mention engine
-(functions.text.mention_matches, JVM regexp + literal canon map) must
-reproduce the 'regex' pandas-UDF engine exactly — leftmost,
-longest-alternative-first, non-overlapping, word-boundary, canonical-casing
-— on adversarial fixtures and on the real synth transcripts the driver's
-gated queries scan."""
+"""The native mention scan (functions.text.mention_matches: one JVM regex
+over a prefix-tree alternation plus a literal canon map) must reproduce a
+plain-Python reference exactly — leftmost, longest-first, non-overlapping,
+word-boundary, canonical casing — on adversarial fixtures, on random
+dictionaries whose prefixes nest deeply, and on the real synth transcripts
+the driver's gated queries scan."""
 
 from __future__ import annotations
 
 import random
+import re
 
 from pyspark.sql import functions as F
 
@@ -15,16 +16,26 @@ from anything2rdf_spark.functions import text as TX
 from anything2rdf_spark.sources import synth
 
 
+def _reference_scanner(surfaces):
+    """A flat alternation of the lowered surfaces ordered by (-len, s) over
+    the lowered text, mapped back through the last-writer-wins canon map."""
+    ordered = sorted({s for s in surfaces if s}, key=lambda s: (-len(s), s))
+    canon = {s.lower(): s for s in ordered}
+    lowered = sorted(canon, key=lambda s: (-len(s), s))
+    pattern = re.compile(r"\b(" + "|".join(re.escape(s) for s in lowered) + r")\b")
+    return lambda text: [] if not canon or text is None else [
+        canon[m] for m in pattern.findall(text.lower())
+    ]
+
+
 def _compare(spark, surfaces, texts):
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    scan_udf = TX.mention_scan_udf(surfaces, engine="regex")
-    rows = df.select(
-        "text",
-        TX.mention_matches(F.col("text"), surfaces, engine="native").alias("nat"),
-        scan_udf(F.col("text")).alias("ref"),
-    ).collect()
+    rows = df.select("text", TX.mention_matches(F.col("text"), surfaces).alias("nat")).collect()
+    assert len(rows) == len(texts)
+    scan = _reference_scanner(surfaces)
     for r in rows:
-        assert r.nat == r.ref, f"native/regex drift on {r.text!r}: {r.nat} != {r.ref}"
+        ref = scan(r.text)
+        assert r.nat == ref, f"native/reference drift on {r.text!r}: {r.nat} != {ref}"
 
 
 def test_native_engine_fixtures(spark):
@@ -56,13 +67,14 @@ def test_native_engine_unicode_casefold(spark):
 def test_native_engine_case_variant_canon(spark):
     df = spark.createDataFrame([("ibm ships",)], "text string")
     got = df.select(
-        TX.mention_matches(F.col("text"), ["IBM", "Ibm"], engine="native").alias("m")
+        TX.mention_matches(F.col("text"), ["IBM", "Ibm"]).alias("m")
     ).collect()[0]["m"]
     assert got == ["Ibm"]
 
 
 def test_native_engine_metachars_and_accents(spark):
-    surfaces = ["Études Institute", "--Études--", "a.b", "x (y)", "c+d", "q|r"]
+    surfaces = ["Études Institute", "--Études--", "a.b", "x (y)", "c+d", "q|r",
+                "AT&T", "C++", "[x]", "a\\Eb", "^$", "{1}"]
     _compare(
         spark,
         surfaces,
@@ -72,6 +84,8 @@ def test_native_engine_metachars_and_accents(spark):
             "a.b literal but not aXb",
             "x (y) and c+d and q|r appear",
             "étude prefix no match",
+            "at&t and c++ and [x] and a\\eb",
+            "x ^$ y {1} z",
         ],
     )
 
@@ -91,24 +105,50 @@ def test_native_engine_random_ascii_corpus(spark):
     _compare(spark, surfaces, cases)
 
 
+def test_native_engine_random_nested_prefixes(spark):
+    """~3,000 random surfaces over a tiny alphabet with spaces,
+    punctuation and an accented letter, so surfaces are prefixes of one
+    another many levels deep and the prefix tree branches at every depth;
+    case variants make the canon map pick among them."""
+    rng = random.Random(601)
+    alphabet = "abc -.'é+"
+    surfaces = ["".join(rng.choices(alphabet, k=rng.randint(1, 9))) for _ in range(3000)]
+    surfaces += [s.upper() for s in rng.sample(surfaces, 300)]
+    surfaces += ["AT&T", "C++", "µ", "Éa", "ÉA", "", None]
+    texts = [None, ""] + [
+        "".join(rng.choices(alphabet + "ABÉ_x", k=rng.randint(0, 80))) for _ in range(3000)
+    ]
+    _compare(spark, surfaces, texts)
+
+
 def test_native_engine_empty_dictionary(spark):
-    df = spark.createDataFrame([("anything",), (None,)], "text string")
-    got = [r["m"] for r in df.select(
-        TX.mention_matches(F.col("text"), [], engine="native").alias("m")
-    ).collect()]
-    assert got == [[], []]
+    """Empty and NULL labels are not surfaces: they neither match nor break
+    the scan's construction."""
+    df = spark.createDataFrame([("Ada met ada",), (None,)], "text string")
+    for surfaces, want in (
+        ([], [[], []]), ([None, ""], [[], []]), (["Ada", "", None], [["Ada", "Ada"], []])
+    ):
+        got = [r["m"] for r in df.select(
+            TX.mention_matches(F.col("text"), surfaces).alias("m")
+        ).collect()]
+        assert got == want, (surfaces, got)
+
+
+def test_native_engine_long_label(spark):
+    """A 2,000-character label and its 1,000-character prefix: the prefix
+    tree is built without recursion per character."""
+    long = "ab " * 666 + "ab"
+    surfaces = [long, long[:1000], "Ab"]
+    _compare(spark, surfaces, [long, long[:1000] + "x", "ab " + long + " ab"])
 
 
 def test_native_engine_on_synth_transcripts(spark):
     """The exact data shape the driver's gated queries scan."""
     ts = synth.transcripts(spark, n_convs=120, seed=42)
-    scan_udf = TX.mention_scan_udf(synth.ALL_MENTION_NAMES, engine="regex")
-    bad = (
-        ts.select(
-            TX.mention_matches(F.col("text"), synth.ALL_MENTION_NAMES, engine="native").alias("nat"),
-            scan_udf(F.col("text")).alias("ref"),
-        )
-        .filter(F.col("nat") != F.col("ref"))
-        .count()
-    )
-    assert bad == 0
+    rows = ts.select(
+        "text", TX.mention_matches(F.col("text"), synth.ALL_MENTION_NAMES).alias("nat")
+    ).collect()
+    assert sum(len(r.nat) for r in rows) > 0
+    scan = _reference_scanner(synth.ALL_MENTION_NAMES)
+    bad = [r for r in rows if r.nat != scan(r.text)]
+    assert not bad, bad[:3]

@@ -83,6 +83,28 @@ def test_pipeline_canonicalization_rewrites_mentions(spark, tmp_path):
     assert triples.filter(F.col("subj").endswith("entity_p001")).count() == 0
 
 
+def test_pipeline_run_with_empty_and_null_labels(spark, tmp_path):
+    """A dictionary row whose alt_labels hold an empty string and a NULL
+    runs through every stage: blank labels are dropped before the scan is
+    built, and the other labels still link."""
+    from anything2rdf_spark.operators.extract import P_MENTIONS
+
+    ts = spark.createDataFrame(
+        [("c1", 0, "user", "Ada Lovelace wrote notes", None, None)],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    blank = spark.createDataFrame(
+        [("x998", "Blank Alias", ["", None], "concept", "en")],
+        "entity_id string, pref_label string, alt_labels array<string>, kind string, lang string",
+    )
+    d = synth.entity_dictionary(spark).unionByName(blank)
+    p = Pipeline(spark, str(tmp_path / "whblank"), n_buckets=4)
+    m = p.run(transcripts=ts, dictionary=d, fingerprint="blank")
+    assert all(m[s]["status"] == "done" for s in ("extract", "link", "materialize"))
+    linked = p.triples().filter(F.col("pred") == P_MENTIONS).collect()
+    assert [r["obj_iri"].rsplit("_", 1)[-1] for r in linked] == ["p000"]
+
+
 def test_lineage_metrics_recorded(spark, tmp_path, inputs):
     wh = str(tmp_path / "wh3")
     p = Pipeline(spark, wh, n_buckets=4)

@@ -86,18 +86,20 @@ def dictionary(spark, tmp_path_factory):
     return spark.read.parquet(path)
 
 
-def test_small_dictionary_mention_path_runs_without_python(spark, transcripts, dictionary):
-    """With a dictionary of at most AC_THRESHOLD surfaces, mention
-    extraction, the surface index and linking plan no Python node: the scan
-    is a native regex and NFC a JVM call."""
-    from anything2rdf_spark.functions.text import AC_THRESHOLD
-
+@pytest.mark.parametrize("n_surfaces", [24, 10_000], ids=["stock", "synthetic_1e4"])
+def test_small_dictionary_mention_path_runs_without_python(
+    spark, transcripts, dictionary, n_surfaces
+):
+    """Mention extraction, the surface index and linking plan no Python
+    node at any dictionary size: the scan is one native regex and NFC a JVM
+    call. Run with the 24 stock surfaces and with 10⁴ synthetic ones."""
     surfaces = sorted(set(synth.ALL_MENTION_NAMES))
-    assert len(surfaces) <= AC_THRESHOLD
-    mentions = EX.extract_mentions(transcripts, spark.sparkContext.broadcast(surfaces))
+    assert len(surfaces) == 24
+    surfaces += [f"entity{i:05d} name{i % 97}" for i in range(n_surfaces - len(surfaces))]
+    mentions = EX.extract_mentions(transcripts, surfaces)
     for df in (mentions, LK.surface_index(dictionary), LK.link_mentions(mentions, dictionary)):
         p = plan(df)
-        assert not [n for n in PYTHON_NODES if n in p], p
+        assert not [n for n in PYTHON_NODES if n in p], p[:2000]
 
 
 def test_rewrite_triples_join_strategy_policy(spark):

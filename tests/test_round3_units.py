@@ -112,14 +112,3 @@ def test_sessionize_ntz_timestamps(spark):
     # round trip that a DST transition could shift by ±1h)
     out = sessionize(df, gap_minutes=30)
     assert out.select("session_id").distinct().count() == 2
-
-
-def test_scanner_cache_content_keyed():
-    from anything2rdf_spark.functions.text import _surfaces_fingerprint
-
-    a = _surfaces_fingerprint(["B", "A"], "auto")
-    b = _surfaces_fingerprint(["A", "B", "A"], "auto")
-    c = _surfaces_fingerprint(["A", "C"], "auto")
-    d = _surfaces_fingerprint(["A", "B"], "regex")
-    assert a == b  # order/dup-insensitive content key
-    assert a != c and a != d

@@ -1,7 +1,5 @@
 import re
 
-from pyspark.sql import functions as F
-
 from anything2rdf_spark.functions import text as TX
 
 
@@ -94,12 +92,12 @@ def test_norm_surface(spark):
 
 
 def test_mention_scan(spark):
-    scan = TX.mention_scan_udf(["Ada Lovelace", "Ada", "Charles Babbage"])
+    surfaces = ["Ada Lovelace", "Ada", "Charles Babbage"]
     df = spark.createDataFrame(
         [("Ada Lovelace met CHARLES BABBAGE; ada wrote.",), ("no names here",), (None,)],
         "t string",
     )
-    got = [r["m"] for r in df.select(scan(F.col("t")).alias("m")).collect()]
+    got = [r["m"] for r in df.select(TX.mention_matches("t", surfaces).alias("m")).collect()]
     assert got[0] == ["Ada Lovelace", "Charles Babbage", "Ada"]  # longest-first, canonical casing
     assert got[1] == [] and got[2] == []
 
@@ -115,45 +113,12 @@ def test_zero_pad_id(spark):
     assert df.select(TX.zero_pad_id("i").alias("v")).collect()[0]["v"] == "00000123"
 
 
-def _py_regex_scan(surfaces, text):
-    import re as _re
-
-    ordered = sorted(set(surfaces), key=len, reverse=True)
-    pat = _re.compile(r"\b(" + "|".join(_re.escape(s) for s in ordered) + r")\b", _re.IGNORECASE)
-    canon = {s.lower(): s for s in ordered}
-    return [canon[m.lower()] for m in pat.findall(text or "")]
-
-
-def test_aho_corasick_equals_regex_scan():
-    """The AC path must reproduce the alternation regex's leftmost /
-    longest-first / non-overlapping / word-boundary semantics exactly."""
-    import random
-
-    from anything2rdf_spark.functions.text import AhoCorasick, _ac_scan_text
-
-    surfaces = [
-        "Ada Lovelace", "Ada", "Lovelace", "Charles Babbage", "ab", "abab",
-        "error", "err", "CERN", "Tim Berners-Lee", "a b", "Zelda Fitzroy",
-    ]
-    ordered = sorted(set(surfaces), key=len, reverse=True)
-    canon = {s.lower(): s for s in ordered}
-    ac = AhoCorasick(sorted({s.lower() for s in ordered}))
-    rng = random.Random(7)
-    words = ["ada", "lovelace", "ada lovelace", "abab", "ab", "x", "err",
-             "error", "cern", "the", "err,", "ada_", "tim berners-lee", "a b"]
-    cases = ["", "abab", "ab ab", "xabab", "Ada Lovelace met ada", "err error err"]
-    cases += [" ".join(rng.choices(words, k=rng.randint(1, 12))) for _ in range(300)]
-    cases += ["".join(rng.choices(["ab", "a", "b", " ", ",", "_"], k=rng.randint(1, 20))) for _ in range(300)]
-    for text in cases:
-        assert _ac_scan_text(text, ac, canon) == _py_regex_scan(surfaces, text), repr(text)
-
-
 def test_mention_scan_large_dictionary(spark):
-    """10⁵-surface dictionary: the AC path engages (above AC_THRESHOLD) and
-    finds the planted mentions — the single-alternation-regex path cannot
-    serve dictionaries of this size (SURVEY §7.2 hard-part; VERDICT r1 #5)."""
+    """10⁵-surface dictionary: the native scan builds its prefix-tree
+    alternation and finds the planted mentions (SURVEY §7.2 hard-part;
+    VERDICT r1 #5); a flat alternation tries every surface at each
+    position."""
     surfaces = [f"entity{i:05d} name{i % 97}" for i in range(100_000)] + ["Ada Lovelace"]
-    scan = TX.mention_scan_udf(surfaces)
     df = spark.createDataFrame(
         [
             ("t1", "saw entity00042 name42 and Ada Lovelace today"),
@@ -162,17 +127,21 @@ def test_mention_scan_large_dictionary(spark):
         ],
         "id string, text string",
     )
-    got = {r["id"]: r["m"] for r in df.select("id", scan("text").alias("m")).collect()}
+    got = {
+        r["id"]: r["m"]
+        for r in df.select("id", TX.mention_matches("text", surfaces).alias("m")).collect()
+    }
     assert got["t1"] == ["entity00042 name42", "Ada Lovelace"]
     assert got["t2"] == []
     assert got["t3"] == ["entity09999 name8"]
 
 
 def test_mention_scan_broadcast_surfaces(spark):
+    """A Broadcast of the surface list is read through its driver-side
+    value."""
     bc = spark.sparkContext.broadcast(["Ada Lovelace", "Ada", "CERN"])
-    scan = TX.mention_scan_udf(bc)
     df = spark.createDataFrame([("Ada Lovelace visited CERN with ada",)], "text string")
-    (row,) = df.select(scan("text").alias("m")).collect()
+    (row,) = df.select(TX.mention_matches("text", bc).alias("m")).collect()
     assert row["m"] == ["Ada Lovelace", "CERN", "Ada"]
 
 
@@ -187,23 +156,19 @@ def test_punct_trim_interior_newline(spark):
 def test_mention_scan_unicode_casefold_safe(spark):
     """Text whose lowercase differs from any surface's lowercase under
     Unicode case-folding (micro sign µ vs Greek mu μ) must not crash the
-    scanner; both engines agree on plain-lowercase semantics."""
+    scanner; the scan has plain-lowercase semantics."""
     surfaces = ["μm", "Ada"]
     df = spark.createDataFrame(
         [("size in µm here",), ("about μm units",), ("ada spoke",)], "text string"
     )
-    for eng in ("regex", "aho"):
-        scan = TX.mention_scan_udf(surfaces, engine=eng)
-        got = [r["m"] for r in df.select(scan(F.col("text")).alias("m")).collect()]
-        # micro sign is NOT the same lowercase char as Greek mu: no match
-        assert got == [[], ["μm"], ["Ada"]], (eng, got)
+    got = [r["m"] for r in df.select(TX.mention_matches("text", surfaces).alias("m")).collect()]
+    # micro sign is NOT the same lowercase char as Greek mu: no match
+    assert got == [[], ["μm"], ["Ada"]], got
 
 
 def test_mention_canon_deterministic_case_variants(spark):
     """Case-variant surfaces sharing one lowercase key canonicalize to the
-    same (lexicographically last) form on every engine and every run."""
-    for eng in ("regex", "aho"):
-        scan = TX.mention_scan_udf(["IBM", "Ibm"], engine=eng)
-        df = spark.createDataFrame([("ibm ships",)], "text string")
-        got = df.select(scan(F.col("text")).alias("m")).collect()[0]["m"]
-        assert got == ["Ibm"], (eng, got)
+    same (lexicographically last) form on every run."""
+    df = spark.createDataFrame([("ibm ships",)], "text string")
+    got = df.select(TX.mention_matches("text", ["IBM", "Ibm"]).alias("m")).collect()[0]["m"]
+    assert got == ["Ibm"], got
