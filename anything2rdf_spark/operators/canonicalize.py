@@ -1,31 +1,49 @@
 """Stage 4: canonicalization (SURVEY §2.10 G1-G2, §2.6 J7, §2.7 A2).
 
-The hard core: connected components over an alias-edges DataFrame via
-iterative joins — the distributed re-expression of schoenberg's in-memory
+The hard core: connected components over an alias-edges DataFrame, the
+canonical id of a component being its min id — schoenberg's in-memory
 union-find (schoenbergcsv2rdf.scala:105-168: pass-1 min-id map, path
-compression, pass-2 substitution + owl:sameAs emission).
+compression, pass-2 substitution + owl:sameAs emission). One regime per
+graph size, the rule the mention scan follows:
 
-Algorithm: min-label propagation with pointer jumping. Each round
-(1) every node takes the min component label among itself and its
-neighbors, then (2) jumps to its label's label (path compression). Both are
-equi-joins; the label distance roughly doubles per round, so a chain of
-length L converges in O(log L) rounds — verified in tests on a 1000-node
-chain. Every round ends in ``localCheckpoint`` to cut lineage (SURVEY §4.2
-custom-work item 1); at cluster scale this would be an Iceberg temp-table
-checkpoint instead. A checkpoint keeps its source plan's size estimate,
-and a round's joins multiply their inputs' estimates, so each round's
-checkpoint is given the round-0 label table's estimate instead (see
-``_with_estimate_of``).
+* **Driver regime** (≤ ``driver_max_edges`` edges, 5M by default — the
+  pipeline's broadcast budget for the canonical map, which it would
+  collect anyway). One job collects the edges as Arrow; a vectorized
+  union-find solves them on the driver (``_min_id_components``: dictionary
+  encoding, ids ranked in Spark's order, min-root hooking with
+  ``np.minimum.at`` and full pointer jumping, O(log n) passes with no
+  per-edge Python); the map returns as a local relation. Any id order
+  converges: a shuffled 2,000-node chain is test-enforced.
+* **Loop regime** (above the budget): min-label propagation with pointer
+  jumping. Each round (1) every node takes the min component label among
+  itself and its neighbors, then (2) jumps to its label's label (path
+  compression), twice. All are equi-joins; the label distance shrinks
+  ~3x per round when ids ascend along a chain, so a chain of length L
+  converges in O(log L) rounds — but out-of-order ids can need far more
+  rounds than ``max_iter`` (ROADMAP item 6). Every round ends in
+  ``localCheckpoint`` to cut lineage (SURVEY §4.2 custom-work item 1); at
+  cluster scale this would be an Iceberg temp-table checkpoint instead. A
+  checkpoint keeps its source plan's size estimate, and a round's joins
+  multiply their inputs' estimates, so each round's checkpoint is given the
+  round-0 label table's estimate instead (see ``_with_estimate_of``).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import NS, OWL_SAMEAS
 from .. import iri
 from ..schemas import TRIPLE_COLS
+
+# edge count up to which connected_components solves the graph on the
+# driver; the pipeline's canonical-map broadcast budget has the same default
+DRIVER_MAX_EDGES = 5_000_000
 
 
 def _with_estimate_of(checkpointed: DataFrame, like: DataFrame) -> DataFrame:
@@ -51,19 +69,95 @@ def _with_estimate_of(checkpointed: DataFrame, like: DataFrame) -> DataFrame:
     return DataFrame(jdf, checkpointed.sparkSession)
 
 
+def _min_id_components(src: pa.Array, dst: pa.Array) -> pa.Table:
+    """Vectorized union-find over the edge arrays ``src[i]``-``dst[i]``:
+    one (node_id, canonical_id) row per distinct id, canonical = the min id
+    of its component, rows clustered by canonical_id.
+
+    Ids are ranked by their sorted dictionary (Arrow sorts strings by
+    their bytes, Spark's ``min``/``least`` order). Each pass hooks the
+    larger root of every edge that still spans two trees onto the smaller
+    one (``np.minimum.at`` keeps the smallest candidate), then pointer-jumps
+    until every node points at its root. Parents only ever point at smaller
+    ranks, so no cycle forms and a root is its component's min. A tree with
+    an edge out either hooks, absorbs another, or hooks on the next pass, so
+    the number of such trees halves at least every two passes. A NULL id
+    joins no edge and maps to NULL, as the loop regime has it."""
+    m = len(src)
+    enc = pc.dictionary_encode(pa.concat_arrays([src, dst]))
+    ids = enc.dictionary  # distinct non-null ids
+    order = pc.sort_indices(ids).to_numpy()
+    ids = ids.take(order)
+    rank = np.empty(len(ids), np.int64)
+    rank[order] = np.arange(len(ids))
+    codes = pc.fill_null(enc.indices, -1).to_numpy()
+    u, v = codes[:m], codes[m:]
+    keep = (u >= 0) & (v >= 0) & (u != v)
+    u, v = rank[u[keep]], rank[v[keep]]
+    parent = np.arange(len(ids))
+    while True:
+        ru, rv = parent[u], parent[v]
+        spans = ru != rv
+        if not spans.any():
+            break
+        u, v, ru, rv = u[spans], v[spans], ru[spans], rv[spans]
+        np.minimum.at(parent, np.maximum(ru, rv), np.minimum(ru, rv))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    rows = np.argsort(parent, kind="stable")
+    node, canon = ids.take(rows), ids.take(parent[rows])
+    if (codes < 0).any():
+        none = pa.nulls(1, ids.type)
+        node, canon = pa.concat_arrays([node, none]), pa.concat_arrays([canon, none])
+    return pa.table({"node_id": node, "canonical_id": canon})
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src_id",
     dst: str = "dst_id",
     max_iter: int = 50,
-    checkpoint: bool = True,
+    driver_max_edges: int = DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """Edges → canonical map (node_id, canonical_id) with canonical = min id
     of the component (min-id semantics, schoenbergcsv2rdf.scala:135).
 
     Isolated nodes (self-loops) map to themselves. Deterministic under any
-    partitioning. Raises if not converged within ``max_iter`` rounds (a
-    10^12-scale run would page instead)."""
+    partitioning. A graph of at most ``driver_max_edges`` edges is solved on
+    the driver: one job collects it, and the map is a local relation, one
+    partition per ``driver_max_edges`` rows, clustered by canonical_id.
+    Above that the edges are read again by the checkpointed loop, which
+    raises if not converged within ``max_iter`` rounds (a 10^12-scale run
+    would page instead). The size probe keeps each input partition's first
+    ``driver_max_edges + 1`` rows, so above the budget it costs about one
+    extra pass over the edges."""
+    spark = edges.sparkSession
+    # both endpoints in the one type the loop's union of them has
+    node_type = (
+        edges.select(F.col(src).alias("n"))
+        .unionByName(edges.select(F.col(dst).alias("n")))
+        .schema["n"]
+        .dataType
+    )
+    probe = edges.select(
+        F.col(src).cast(node_type).alias("a"), F.col(dst).cast(node_type).alias("b")
+    ).limit(driver_max_edges + 1).toArrow()
+    if probe.num_rows > driver_max_edges:
+        return _components_loop(edges, src, dst, max_iter)
+    cm = _min_id_components(probe["a"].combine_chunks(), probe["b"].combine_chunks())
+    schema = T.StructType(
+        [T.StructField("node_id", node_type), T.StructField("canonical_id", node_type)]
+    )
+    parts = max(1, -(-cm.num_rows // max(driver_max_edges, 1)))
+    return spark.createDataFrame(cm, schema).coalesce(parts)
+
+
+def _components_loop(edges: DataFrame, src: str, dst: str, max_iter: int) -> DataFrame:
+    """The loop regime of ``connected_components``: checkpointed min-label
+    propagation with pointer jumping over iterative joins."""
     und = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -75,11 +169,8 @@ def connected_components(
         .unionByName(edges.select(F.col(dst).alias("node")))
         .distinct()
     )
-    parent = nodes.select("node", F.col("node").alias("comp"))
-    if checkpoint:
-        und = und.localCheckpoint()
-        parent = parent.localCheckpoint()
-        parent0 = parent
+    und = und.localCheckpoint()
+    parent = parent0 = nodes.select("node", F.col("node").alias("comp")).localCheckpoint()
 
     from pyspark.sql import Observation
 
@@ -115,18 +206,13 @@ def connected_components(
             "_old",
             F.least("comp", F.coalesce("comp3", "comp")).alias("comp"),
         )
-        if checkpoint:
-            # the changed-count observes the SAME job that materializes the
-            # checkpoint — one action per round, not two (per-round jobs are
-            # the wall-clock driver of the O(log L) loop at any scale)
-            obs = Observation()
-            p2o = p2.observe(obs, F.count_if(F.col("comp") != F.col("_old")).alias("chg"))
-            parent = _with_estimate_of(p2o.select("node", "comp").localCheckpoint(), parent0)
-            changed = obs.get["chg"]
-        else:
-            changed = p2.filter(F.col("comp") != F.col("_old")).limit(1).count()
-            parent = p2.select("node", "comp")
-        if changed == 0:
+        # the changed-count observes the SAME job that materializes the
+        # checkpoint — one action per round, not two (per-round jobs are
+        # the wall-clock driver of the O(log L) loop at any scale)
+        obs = Observation()
+        p2o = p2.observe(obs, F.count_if(F.col("comp") != F.col("_old")).alias("chg"))
+        parent = _with_estimate_of(p2o.select("node", "comp").localCheckpoint(), parent0)
+        if obs.get["chg"] == 0:
             return parent.select(F.col("node").alias("node_id"), F.col("comp").alias("canonical_id"))
     raise RuntimeError(f"connected_components did not converge in {max_iter} iterations")
 

@@ -23,8 +23,12 @@ Scale notes (the plan at 1000 executors):
 * link shuffles only the mentions relation (tiny vs transcripts) and
   broadcasts the surface index; a hot surface form is absorbed by AQE
   skew-join + the two-phase dedup.
-* canonicalize iterates joins over the alias-edge relation (entity-sized,
-  not turn-sized) with per-round checkpoints to cut lineage.
+* canonicalize solves an alias graph of up to ``broadcast_map_max_rows``
+  edges on the driver, where its map would be collected for the rewrite
+  broadcast anyway: one job collects the edges and a vectorized union-find
+  (no per-row Python, no Python worker) returns the map. A larger
+  graph iterates joins over the alias-edge relation (entity-sized, not
+  turn-sized) with per-round checkpoints to cut lineage.
 * materialize's single big shuffle is the set-semantics dedup, partitioned
   by the triple key — AQE handles skew; output re-buckets by conv_id.
 """
@@ -58,7 +62,7 @@ class Pipeline:
         warehouse: str,
         ns: str = NS,
         n_buckets: int = 32,
-        broadcast_map_max_rows: int = 5_000_000,
+        broadcast_map_max_rows: int = CN.DRIVER_MAX_EDGES,
     ):
         self.spark = spark
         self.catalog = Catalog(spark, warehouse, n_buckets=n_buckets)
@@ -66,7 +70,9 @@ class Pipeline:
         self.ns = ns
         # canonical-map rewrite policy: broadcast the map only below this
         # row count; above it (entity-scale maps at 10^12 turns can exceed
-        # any broadcast budget) fall back to a shuffle join that AQE plans
+        # any broadcast budget) fall back to a shuffle join that AQE plans.
+        # The same budget bounds the alias graphs canonicalize solves on
+        # the driver.
         self.broadcast_map_max_rows = broadcast_map_max_rows
 
     def _stage(self, run_id, name, fingerprint, force, compute, tables, metrics):
@@ -211,7 +217,9 @@ class Pipeline:
             if alias_edges is None:
                 empty = self.spark.createDataFrame([], "node_id string, canonical_id string")
                 return {"canonical_map": empty, "triples_sameas": CN.sameas_triples(empty, ns=self.ns)}
-            cm = CN.connected_components(alias_edges)
+            cm = CN.connected_components(
+                alias_edges, driver_max_edges=self.broadcast_map_max_rows
+            )
             return {
                 "canonical_map": cm,
                 "triples_sameas": CN.sameas_triples(cm, ns=self.ns),

@@ -8,6 +8,7 @@ Usage (pin externally, e.g. `taskset -c 8-15 python bench_extra.py curate`):
     python bench_extra.py curate   # curate_corpus component breakdown
     python bench_extra.py emit     # extraction emit kernel variants
     python bench_extra.py scan     # mention scan at 10^2..10^5 surfaces
+    python bench_extra.py cc       # connected components at 10^3..10^6 edges
     python bench_extra.py plans OUT.txt  # stage-table write plans, sf0.001
 """
 
@@ -161,6 +162,83 @@ def main_scan():
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+CC_SIZES = (1_000, 10_000, 100_000, 1_000_000)
+
+
+def _cc_edges(n: int, seed: int = 7):
+    """``n`` alias edges as a pyarrow table: a chain over half of them
+    whose ids are in shuffled order, the rest trees of 2-6 nodes (each node
+    hooked to a random earlier one), every id ``n%07d`` of a random
+    permutation. Returns the table and its component count."""
+    import numpy as np
+    import pyarrow as pa
+
+    rng = np.random.default_rng(seed)
+    chain = n // 2
+    src, dst = [np.arange(chain)], [np.arange(1, chain + 1)]
+    nxt, trees, left = chain + 1, 1, n - chain
+    while left > 0:
+        k = min(int(rng.integers(2, 7)), left + 1)
+        kid = np.arange(1, k)
+        src.append(nxt + kid)
+        dst.append(nxt + (rng.random(k - 1) * kid).astype(np.int64))
+        nxt, trees, left = nxt + k, trees + 1, left - (k - 1)
+    perm = rng.permutation(nxt)
+    names = np.char.add("n", np.char.zfill(perm.astype(str), 7))
+    return pa.table({
+        "src_id": names[np.concatenate(src)], "dst_id": names[np.concatenate(dst)],
+    }), trees
+
+
+def main_cc():
+    """Connected components at ``CC_SIZES`` edges (``_cc_edges``: a
+    shuffled-id chain plus 2-6-node trees, read from parquet). Per size, one
+    JSON line: the default call's wall (edge collect, the driver's
+    union-find and the local relation) and its kernel alone, the driver
+    Python process's peak RSS after it, and the checkpointed loop's wall
+    (``driver_max_edges=0``) or the error it raised."""
+    import resource
+    import shutil
+    import tempfile
+
+    import pyarrow.parquet as pq
+
+    from anything2rdf_spark.operators import canonicalize as CN
+    from anything2rdf_spark.session import get_spark
+
+    spark = get_spark(master="local[4]", app_name="a2r-bx-cc", shuffle_partitions=4)
+    tmp = tempfile.mkdtemp(prefix="a2r_bx_cc_")
+    try:
+        for n in CC_SIZES:
+            table, n_comp = _cc_edges(n)
+            path = os.path.join(tmp, f"e{n}.parquet")
+            pq.write_table(table, path)
+            edges = spark.read.parquet(path)
+            t0 = time.time()
+            cm = CN.connected_components(edges)
+            call_s = time.time() - t0
+            rss_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
+            t0 = time.time()
+            CN._min_id_components(table["src_id"].combine_chunks(), table["dst_id"].combine_chunks())  # noqa: SLF001
+            kernel_s = time.time() - t0
+            ok = cm.select("canonical_id").distinct().count() == n_comp
+            t0 = time.time()
+            try:
+                loop = CN.connected_components(edges, driver_max_edges=0)
+                loop_out = "ok" if loop.select("canonical_id").distinct().count() == n_comp else "wrong"
+            except RuntimeError as e:
+                loop_out = str(e)
+            print(json.dumps({
+                "edges": n, "components": n_comp, "driver_ok": ok,
+                "driver_call_s": round(call_s, 2), "kernel_s": round(kernel_s, 2),
+                "driver_peak_rss_mb": round(rss_mb), "loop_s": round(time.time() - t0, 2),
+                "loop": loop_out,
+            }), flush=True)
+    finally:
+        spark.stop()
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def _write_plans(event_log: str, root: str) -> dict[str, str]:
     """{table: final formatted plan} of every parquet write under
     ``root``/wh in a Spark event log: the plan of the last adaptive update
@@ -237,4 +315,7 @@ def main_plans():
 
 if __name__ == "__main__":
     which = sys.argv[1] if len(sys.argv) > 1 else "curate"
-    {"curate": main_curate, "emit": main_emit, "scan": main_scan, "plans": main_plans}[which]()
+    {
+        "curate": main_curate, "emit": main_emit, "scan": main_scan, "cc": main_cc,
+        "plans": main_plans,
+    }[which]()

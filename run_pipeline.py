@@ -51,7 +51,8 @@ def main(argv: list[str] | None = None) -> int:
         dest="broadcast_map_max_rows",
         type=int,
         default=5_000_000,
-        help="canonical-map rewrite broadcasts under this row count, else shuffle-joins",
+        help="canonical-map rewrite broadcasts under this row count, else shuffle-joins; "
+        "alias graphs up to this many edges are solved on the driver",
     )
     args = ap.parse_args(argv)
 

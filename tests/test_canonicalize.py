@@ -40,10 +40,11 @@ def test_connected_components_fixture(spark):
 
 
 def test_connected_components_iteration_bound(spark):
-    # a 1000-node chain must converge in O(log n) rounds, not O(n)
+    # the loop regime (driver_max_edges=0) must converge on a 1000-node
+    # chain in O(log n) rounds, not O(n)
     edges = synth.alias_edges(spark, big_chain=1000)
     try:
-        CN.connected_components(edges, max_iter=16)
+        CN.connected_components(edges, max_iter=16, driver_max_edges=0)
     except RuntimeError as e:  # pragma: no cover
         raise AssertionError("pointer jumping failed to converge in 16 rounds") from e
 
@@ -107,10 +108,13 @@ def test_min_dup_map(spark):
 
 def test_components_partitioning_invariant(spark):
     edges = synth.alias_edges(spark, big_chain=200).repartition(16)
-    a = {(r["node_id"], r["canonical_id"]) for r in CN.connected_components(edges).collect()}
+    a = {
+        (r["node_id"], r["canonical_id"])
+        for r in CN.connected_components(edges, driver_max_edges=0).collect()
+    }
     b = {
         (r["node_id"], r["canonical_id"])
-        for r in CN.connected_components(edges.coalesce(1)).collect()
+        for r in CN.connected_components(edges.coalesce(1), driver_max_edges=0).collect()
     }
     assert a == b
 
@@ -132,10 +136,10 @@ def test_degree_merge_duplicate_edges_and_null_names(spark):
 
 
 def test_connected_components_shuffled_chain(spark):
-    """A chain whose ids are out of order needs several rounds; every
-    round's checkpoint must start from a fresh size estimate. Inherited,
-    the estimate compounded across rounds and planning a 10-node chain's
-    third round did not finish in 300 s."""
+    """In the loop regime a chain whose ids are out of order needs several
+    rounds; every round's checkpoint must start from a fresh size estimate.
+    Inherited, the estimate compounded across rounds and planning a 10-node
+    chain's third round did not finish in 300 s."""
     import random
     import time
 
@@ -145,8 +149,68 @@ def test_connected_components_shuffled_chain(spark):
     edges = spark.createDataFrame(pairs, "src_id string, dst_id string")
     t0 = time.time()
     got = {
-        r["node_id"]: r["canonical_id"] for r in CN.connected_components(edges).collect()
+        r["node_id"]: r["canonical_id"]
+        for r in CN.connected_components(edges, driver_max_edges=0).collect()
     }
     assert time.time() - t0 < 120
     assert got == py_union_find(pairs)
+
+
+def test_connected_components_shuffled_2000_chain(spark):
+    """A 2,000-node chain with shuffled ids, through the default call (the
+    driver regime): the loop regime raises "did not converge in 50
+    iterations" on it; the vectorized union-find needs O(log n) passes
+    whatever the id order."""
+    import random
+    import time
+
+    ids = [f"n{i:04d}" for i in range(2000)]
+    random.Random(7).shuffle(ids)
+    pairs = [(ids[i], ids[i + 1]) for i in range(len(ids) - 1)]
+    edges = spark.createDataFrame(pairs, "src_id string, dst_id string")
+    t0 = time.time()
+    got = {
+        r["node_id"]: r["canonical_id"] for r in CN.connected_components(edges).collect()
+    }
+    assert time.time() - t0 < 60
+    assert got == py_union_find(pairs)
+
+
+def test_connected_components_kernel_equals_loop(spark):
+    """The driver regime emits exactly the loop regime's rows (forced with
+    ``driver_max_edges=0``) on the FIXTURES §3 corpus plus reversed
+    duplicates, self-loops, 2-cycles, isolated nodes, NULL ids (no edge;
+    the loop keeps one (NULL, NULL) row) and ids whose min depends on
+    binary order: "Z" < "a" and "z" < "é" in UTF-8 bytes."""
+    extra = spark.createDataFrame(
+        [
+            ("p", "q"), ("q", "p"), ("p", "q"),   # reversed duplicates
+            ("s2", "s2"), ("s2", "u2"),           # self-loop on a member
+            ("c1", "c2"), ("c2", "c1"),           # 2-cycle
+            ("iso3", "iso3"),                     # isolated
+            ("k", None), (None, None), (None, "m"),
+            ("a", "Z"), ("é", "z"), ("Zz", "zZ"),
+        ],
+        "src_id string, dst_id string",
+    )
+    edges = synth.alias_edges(spark, big_chain=1000).unionByName(extra)
+    kernel = CN.connected_components(edges)
+    loop = CN.connected_components(edges, driver_max_edges=0)
+    assert [f.dataType for f in kernel.schema] == [f.dataType for f in loop.schema]
+    got = sorted(map(tuple, kernel.collect()), key=repr)
+    assert got == sorted(map(tuple, loop.collect()), key=repr)
+    cm = dict(got)
+    assert cm["a"] == "Z" and cm["é"] == "z" and cm["zZ"] == "Zz"
+    assert cm["k"] == "k" and cm["m"] == "m" and cm[None] is None
+    assert cm["q"] == "p" and cm["u2"] == "s2" and cm["n000999"] == "n000000"
+    assert sum(1 for n, _ in got if n is None) == 1
+
+
+def test_connected_components_kernel_integer_ids(spark):
+    """Integer ids rank numerically (as ``min`` does), not as strings, and
+    keep their type."""
+    edges = spark.createDataFrame([(10, 9), (9, 100), (2, 11)], "a long, b long")
+    cm = CN.connected_components(edges, src="a", dst="b")
+    assert [f.dataType.simpleString() for f in cm.schema] == ["bigint", "bigint"]
+    assert dict(map(tuple, cm.collect())) == {9: 9, 10: 9, 100: 9, 2: 2, 11: 2}
 

@@ -281,3 +281,37 @@ def test_pq_adc_scan_broadcasts_queries(spark):
     p = plan(SM.pq_adc_topk(emb, q, cbs, k=5))
     assert "BroadcastExchange" in p
     assert "SortMergeJoin" not in p
+
+
+def test_canonicalize_job_budget(spark, tmp_path, monkeypatch):
+    """A pipeline's canonicalize stage over the 1,000-node fixture chain
+    runs at most 4 Spark jobs: the edge collect of the driver's union-find
+    and the two table writes (the checkpointed loop ran ~80, one per AQE
+    query stage of each round). Jobs are counted by a job group set per
+    stage."""
+    from anything2rdf_spark.plans.pipeline import Pipeline
+
+    sc = spark.sparkContext
+    stage = Pipeline._stage
+
+    def grouped(self, run_id, name, *args):
+        sc.setJobGroup(f"budget-{name}", name)
+        try:
+            return stage(self, run_id, name, *args)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    monkeypatch.setattr(Pipeline, "_stage", grouped)
+    Pipeline(spark, str(tmp_path / "wh"), n_buckets=4).run(
+        transcripts=synth.transcripts(spark, n_convs=5, seed=7),
+        dictionary=synth.entity_dictionary(spark),
+        alias_edges=synth.alias_edges(spark, big_chain=1000),
+        dictionary_surfaces=synth.ALL_MENTION_NAMES,
+        force=True,
+    )
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    tracker = sc.statusTracker()
+    assert tracker.getJobIdsForGroup("budget-link")  # the grouping works
+    jobs = tracker.getJobIdsForGroup("budget-canonicalize")
+    assert 0 < len(jobs) <= 4, jobs

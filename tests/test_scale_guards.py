@@ -125,7 +125,10 @@ def test_rewrite_policy_shuffle_join_equal(spark):
 
 def test_pipeline_rewrite_policy_threshold(spark, tmp_path):
     """A pipeline whose canonical map exceeds the broadcast threshold takes
-    the shuffle-join path and produces the identical triple set."""
+    the shuffle-join path and produces the identical triple set. The same
+    threshold bounds the alias graphs canonicalize solves on the driver, so
+    ``broadcast_map_max_rows=3`` also compares the checkpointed loop with
+    the driver's union-find end to end."""
     from anything2rdf_spark.plans.pipeline import Pipeline
     from anything2rdf_spark.sources import synth
 
