@@ -134,7 +134,6 @@ def connected_components(
     would page instead). The size probe keeps each input partition's first
     ``driver_max_edges + 1`` rows, so above the budget it costs about one
     extra pass over the edges."""
-    spark = edges.sparkSession
     # both endpoints in the one type the loop's union of them has
     node_type = (
         edges.select(F.col(src).alias("n"))
@@ -152,7 +151,7 @@ def connected_components(
         [T.StructField("node_id", node_type), T.StructField("canonical_id", node_type)]
     )
     parts = max(1, -(-cm.num_rows // max(driver_max_edges, 1)))
-    return spark.createDataFrame(cm, schema).coalesce(parts)
+    return edges.sparkSession.createDataFrame(cm, schema).coalesce(parts)
 
 
 def _components_loop(edges: DataFrame, src: str, dst: str, max_iter: int) -> DataFrame:
