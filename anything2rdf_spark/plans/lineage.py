@@ -6,12 +6,15 @@ The registry is itself a table in the warehouse (append-only JSONL — readable
 without Spark, atomic per stage-completion). A stage is *complete* for a
 given input fingerprint when a ``status=done`` row with that fingerprint
 exists; re-runs skip it and read the checkpoint (SURVEY §4.2 custom item 4).
+A stage whose table raised leaves a ``status=failed`` row naming the
+error's class, which never counts as complete.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 import uuid
 
@@ -20,6 +23,9 @@ class LineageRegistry:
     def __init__(self, warehouse: str):
         self.path = os.path.join(warehouse, "_lineage.jsonl")
         os.makedirs(warehouse, exist_ok=True)
+        # one stage's rows are appended together, never interleaved with
+        # another thread's
+        self._lock = threading.Lock()
 
     def _rows(self) -> list[dict]:
         if not os.path.exists(self.path):
@@ -58,8 +64,9 @@ class LineageRegistry:
         wall_ms: int,
         status: str = "done",
         partition_rows: dict[int, int] | None = None,
+        error: str | None = None,
     ) -> None:
-        with open(self.path, "a") as f:
+        with self._lock, open(self.path, "a") as f:
             for pid, n in (partition_rows or {}).items():
                 f.write(
                     json.dumps(
@@ -72,6 +79,7 @@ class LineageRegistry:
                             "rows_out": n,
                             "wall_ms": None,
                             "status": status,
+                            "error": None,
                             "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
                         }
                     )
@@ -88,6 +96,7 @@ class LineageRegistry:
                         "rows_out": rows_out,
                         "wall_ms": wall_ms,
                         "status": status,
+                        "error": error,
                         "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
                     }
                 )

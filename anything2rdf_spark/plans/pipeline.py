@@ -7,15 +7,52 @@ orchestrated by a thin driver that records per-stage/per-partition lineage +
 metrics and skips completed stages on re-run (idempotent resume — north_star
 mandate).
 
+The driver runs the stages' 11 checkpoint tables as a table graph, not as
+five stages in series. ``Pipeline.run`` declares every table once as
+``(stage, table, reads, build)``, where ``reads`` names the checkpoint
+tables its build scans::
+
+    transcripts_norm ──┬─ triples_candidate ─────────────────────┐
+                       └─ mentions ── mentions_linked ─┬─ triples_mentions ─┤
+                                                       └─ entities_new      │
+    transcripts_quarantine      triples_dictionary ─────────────────────────┤
+    canonical_map ── triples_sameas ────────────────────────────────────────┴─ triples
+
+A table's build and write start on their own thread as soon as every table
+it reads is committed, so the critical path is ``transcripts_norm →
+mentions → mentions_linked → triples_mentions → triples``. The quarantine,
+the dictionary triples, canonicalize and ``triples_candidate`` fill the
+task slots that one table's write at a time left idle. No thread waits on
+another: a table is submitted only once its inputs are on disk, one thread
+per table, on Spark's default FIFO scheduler. Each thread inherits the
+caller's Spark local properties (``inheritable_thread_target``), so a job
+group the caller set covers every job of the build, and sets only the job
+description, to ``"<stage>:<table>"``.
+
+Stage walls overlap: a stage's ``wall_s`` is the span from its first
+table's start to its last table's commit, and ``total_wall_s`` is the wall
+of the whole run. A table that fails leaves a ``status="failed"`` lineage
+row for its stage, none of its dependents starts, the tables already
+running finish, and ``run`` raises the first failure in table order.
+
+Every checkpoint stays: each is what resume restarts from (a stage is
+skipped only when all of its tables exist). ``triples_mentions`` and
+``entities_new`` scan the committed ``mentions_linked`` parquet, so the
+link join runs once and no DataFrame is cached across writes;
+``triples_sameas`` derives from the same map DataFrame that
+``canonical_map``'s build solved. Running the writes side by side rather
+than dropping them is how they stop costing wall time (the cost rule of
+*Lightweight Materialization for Fast Dashboards Over Joins*, SIGMOD
+2023).
+
 Checkpoint layout: only the final ``triples`` table is hash-bucketed by
 ``conv_id`` (the Catalog's ``pbucket`` directories, the parquet stand-in for
 an Iceberg ``bucket(n, conv_id)`` table), because it is the product readers
 scan. The ten transient stage tables are written flat, with the partitioning
 their plans produce: no stage reads them by bucket, so a 32-way hash
 shuffle and a file per bucket on each of them bought nothing but a shuffle,
-more files and more commit work (the cost rule of *Lightweight
-Materialization for Fast Dashboards Over Joins*, SIGMOD 2023). Their
-lineage rows are per written partition (see ``Catalog.write``).
+more files and more commit work. Their lineage rows are per written
+partition (see ``Catalog.write``).
 
 Scale notes (the plan at 1000 executors):
 * extract is a narrow map over the transcripts_norm scan — no shuffle; its
@@ -36,7 +73,9 @@ Scale notes (the plan at 1000 executors):
 from __future__ import annotations
 
 import time
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -75,34 +114,83 @@ class Pipeline:
         # the driver.
         self.broadcast_map_max_rows = broadcast_map_max_rows
 
-    def _stage(self, run_id, name, fingerprint, force, compute, tables, metrics):
-        """Run one stage with skip-if-complete semantics; ``compute`` returns
-        {table_name: DataFrame}; all get checkpointed, flat except the final
-        triple table."""
-        if not force and self.registry.is_done(name, fingerprint) and all(
-            self.catalog.exists(t) for t in tables
-        ):
-            metrics[name] = {"status": "skipped", "wall_s": 0.0}
-            return
-        t0 = time.time()
-        outputs = compute()
-        pcounts: dict[int, int] = {}
-        for tname, df in outputs.items():
-            bc = FINAL_BUCKET_COL if tname == FINAL_TABLE else None
-            # per-partition lineage counts come from the primary output's
-            # parquet footers — NO read-back scan (at 100 TB a
-            # count-over-read-back is a full extra pass per stage)
-            counts = self.catalog.write(
-                df, tname, bucket_col=bc, collect_partition_counts=(tname == tables[0])
+    def _commit(self, stage: str, table: str, build, primary: bool) -> dict[int, int] | None:
+        """Build one table and write it, flat except the final triple
+        table; runs on the table's own thread. Per-partition lineage counts
+        of a stage's primary table come from its parquet footers — NO
+        read-back scan (at 100 TB a count-over-read-back is a full extra
+        pass per stage)."""
+        self.spark.sparkContext.setJobDescription(f"{stage}:{table}")
+        bc = FINAL_BUCKET_COL if table == FINAL_TABLE else None
+        return self.catalog.write(build(), table, bucket_col=bc, collect_partition_counts=primary)
+
+    def _run_tables(self, run_id: str, fingerprint: str, force: bool, tables: list) -> dict:
+        """Run the ``(stage, table, reads, build)`` graph: skip each stage
+        whose done row and tables exist, start every other table once all
+        the tables it reads are committed, and record one lineage row per
+        finished or failed stage. Returns the per-stage metrics; raises the
+        first failed table's error, in list order."""
+        by_stage = {s: [t for st, t, _, _ in tables if st == s] for s in STAGES}
+        metrics: dict = {}
+        committed: set[str] = set()
+        for s, names in by_stage.items():
+            if not force and self.registry.is_done(s, fingerprint) and all(
+                self.catalog.exists(t) for t in names
+            ):
+                metrics[s] = {"status": "skipped", "wall_s": 0.0}
+                committed.update(names)
+        pending = [t for t in tables if t[0] not in metrics]
+        started: dict[str, float] = {}  # stage -> first table's start
+        pcounts: dict[str, dict[int, int]] = {}  # stage -> primary table's counts
+        failures: dict[str, Exception] = {}  # table -> its error
+
+        def record(stage: str, error: Exception | None = None) -> None:
+            """The stage's lineage rows: done with its primary table's
+            per-partition counts, or failed with the error's class."""
+            wall_ms = int((time.time() - started[stage]) * 1000)
+            counts = None if error else pcounts[stage]
+            rows_out = None if error else sum(counts.values())
+            status = "failed" if error else "done"
+            self.registry.record(
+                run_id, stage, fingerprint, None, rows_out, wall_ms, status=status,
+                partition_rows=counts, error=type(error).__name__ if error else None,
             )
-            if tname == tables[0]:
-                pcounts = counts or {}
-        rows_out = sum(pcounts.values())
-        wall_ms = int((time.time() - t0) * 1000)
-        self.registry.record(
-            run_id, name, fingerprint, None, rows_out, wall_ms, partition_rows=pcounts
-        )
-        metrics[name] = {"status": "done", "wall_s": wall_ms / 1000.0, "rows_out": rows_out}
+            metrics[stage] = {"status": status, "wall_s": wall_ms / 1000.0, "rows_out": rows_out}
+
+        with ThreadPoolExecutor(max_workers=max(1, len(pending))) as pool:
+            running: dict = {}
+            while True:
+                for t in [t for t in pending if committed.issuperset(t[2])]:
+                    pending.remove(t)
+                    stage, table, _, build = t
+                    started.setdefault(stage, time.time())
+                    # wrapped here, on the caller's thread: each table's
+                    # thread gets its own copy of the caller's local
+                    # properties, so its job description stays its own
+                    target = inheritable_thread_target(self.spark)(self._commit)
+                    primary = table == by_stage[stage][0]
+                    running[pool.submit(target, stage, table, build, primary)] = (stage, table)
+                if not running:
+                    break
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in done:
+                    stage, table = running.pop(fut)
+                    try:
+                        counts = fut.result()
+                    except Exception as e:  # recorded here, raised after the graph drains
+                        if stage not in metrics:
+                            record(stage, e)
+                        failures[table] = e
+                        continue
+                    committed.add(table)
+                    if table == by_stage[stage][0]:
+                        pcounts[stage] = counts or {}
+                    if stage not in metrics and committed.issuperset(by_stage[stage]):
+                        record(stage)
+        for _, table, _, _ in tables:
+            if table in failures:
+                raise failures[table]
+        return {s: metrics[s] for s in STAGES}
 
     def run(
         self,
@@ -115,8 +203,8 @@ class Pipeline:
         force: bool = False,
         mention_engine: str = "scan",
     ) -> dict:
+        t_run = time.time()
         run_id = new_run_id()
-        metrics: dict = {"run_id": run_id}
         cat = self.catalog
         # Run-config that changes stage OUTPUT must be part of the skip key:
         # resuming with a different mention engine or namespace against the
@@ -124,24 +212,25 @@ class Pipeline:
         # configuration's checkpoints.
         fingerprint = f"{fingerprint}|eng={mention_engine}|ns={self.ns}"
 
-        # ---- stage 1: normalize -------------------------------------------
-        def normalize():
-            adm = EX.admissible(transcripts)
-            return {
-                # skew-safe two-phase rank: a hot conv_id (10%+ of turns)
-                # never serializes into one window task (north_rule)
-                "transcripts_norm": WD.ordered_turns_skew_safe(adm),
-                "transcripts_quarantine": EX.quarantined(transcripts),
-            }
+        # ---- normalize ------------------------------------------------------
+        def transcripts_norm():
+            # skew-safe two-phase rank: a hot conv_id (10%+ of turns)
+            # never serializes into one window task (north_rule)
+            return WD.ordered_turns_skew_safe(EX.admissible(transcripts))
 
-        self._stage(run_id, "normalize", fingerprint, force, normalize,
-                    ["transcripts_norm", "transcripts_quarantine"], metrics)
+        # ---- extract --------------------------------------------------------
+        def triples_candidate():
+            norm = cat.read("transcripts_norm")
+            triples = EX.extract_triples(norm, ns=self.ns)
+            if code_tables is not None:
+                triples = triples.unionByName(EX.code_table_triples(code_tables, ns=self.ns))
+            # skew-safe successor edges: transcripts_norm carries turn_rank,
+            # so this is a unique-composite-key self-join, never a
+            # per-conversation lead() window (hot conv = one window task)
+            return triples.unionByName(WD.next_turn_triples_join(norm, ns=self.ns))
 
-        # ---- stage 2: extract ---------------------------------------------
-        def extract():
-            # Surface materialization happens INSIDE the stage closure so a
-            # fully-resumed run (stage skipped) never pays the dictionary
-            # collect.
+        def mentions():
+            norm = cat.read("transcripts_norm")
             if mention_engine == "join":
                 # dictionary too big to collect (10⁷+ surfaces): the
                 # surface relation stays a DataFrame end to end —
@@ -153,92 +242,43 @@ class Pipeline:
                         dictionary.select(F.explode("alt_labels").alias("surface"))
                     )
                 )
-            else:
-                surfaces = dictionary_surfaces
-                if surfaces is None:
-                    surfaces = [
-                        r["pref_label"] for r in dictionary.select("pref_label").collect()
-                    ] + [
-                        r["a"]
-                        for r in dictionary.select(F.explode("alt_labels").alias("a")).collect()
-                    ]
-                # the list is compiled into the plan (one native regex plus
-                # a literal canon map); nothing reads it on the executors
-            norm = cat.read("transcripts_norm")
-            triples = EX.extract_triples(norm, ns=self.ns)
-            if code_tables is not None:
-                triples = triples.unionByName(EX.code_table_triples(code_tables, ns=self.ns))
-            # skew-safe successor edges: transcripts_norm carries turn_rank,
-            # so this is a unique-composite-key self-join, never a
-            # per-conversation lead() window (hot conv = one window task)
-            triples = triples.unionByName(WD.next_turn_triples_join(norm, ns=self.ns))
-            mentions = (
-                EX.extract_mentions_join(norm, surfaces_df)
-                if mention_engine == "join"
-                else EX.extract_mentions(norm, surfaces)
-            )
-            return {
-                "triples_candidate": triples,
-                "mentions": mentions,
-            }
+                return EX.extract_mentions_join(norm, surfaces_df)
+            # Surfaces are collected inside the table's build so a
+            # fully-resumed run (stage skipped) never pays the dictionary
+            # collect. The list is compiled into the plan (one native regex
+            # plus a literal canon map); nothing reads it on the executors.
+            surfaces = dictionary_surfaces
+            if surfaces is None:
+                surfaces = [
+                    r["pref_label"] for r in dictionary.select("pref_label").collect()
+                ] + [
+                    r["a"]
+                    for r in dictionary.select(F.explode("alt_labels").alias("a")).collect()
+                ]
+            return EX.extract_mentions(norm, surfaces)
 
-        self._stage(run_id, "extract", fingerprint, force, extract,
-                    ["triples_candidate", "mentions"], metrics)
+        # ---- canonicalize ---------------------------------------------------
+        # the map canonical_map's build solved; triples_sameas starts after
+        # that table is committed and derives its rows from the same map
+        canon: list[DataFrame] = []
 
-        # ---- stage 3: link ------------------------------------------------
-        link_persisted: list = []
-
-        def link():
-            mentions = cat.read("mentions")
-            # linked feeds THREE stage outputs; each checkpoint write is its
-            # own job, so without a persist the mention scan + dictionary
-            # join ran three times (guide §5: persist when reused and
-            # recomputation is a full pass). Mention-scale, spills to disk;
-            # released right after the stage's writes.
-            linked = LK.link_mentions(mentions, dictionary, ns=self.ns).persist()
-            link_persisted.append(linked)
-            return {
-                "mentions_linked": linked,
-                "triples_mentions": LK.mention_triples(linked, ns=self.ns),
-                "triples_dictionary": LK.dictionary_triples(dictionary, ns=self.ns),
-                "entities_new": LK.new_entities(linked),
-            }
-
-        try:
-            self._stage(run_id, "link", fingerprint, force, link,
-                        ["mentions_linked", "triples_mentions", "triples_dictionary", "entities_new"],
-                        metrics)
-        finally:
-            for df in link_persisted:
-                df.unpersist()
-
-        # ---- stage 4: canonicalize ----------------------------------------
-        def canonicalize():
+        def canonical_map():
             if alias_edges is None:
-                empty = self.spark.createDataFrame([], "node_id string, canonical_id string")
-                return {"canonical_map": empty, "triples_sameas": CN.sameas_triples(empty, ns=self.ns)}
-            cm = CN.connected_components(
-                alias_edges, driver_max_edges=self.broadcast_map_max_rows
-            )
-            return {
-                "canonical_map": cm,
-                "triples_sameas": CN.sameas_triples(cm, ns=self.ns),
-            }
+                cm = self.spark.createDataFrame([], "node_id string, canonical_id string")
+            else:
+                cm = CN.connected_components(
+                    alias_edges, driver_max_edges=self.broadcast_map_max_rows
+                )
+            canon.append(cm)
+            return cm
 
-        self._stage(run_id, "canonicalize", fingerprint, force, canonicalize,
-                    ["canonical_map", "triples_sameas"], metrics)
-
-        # ---- stage 5: materialize -----------------------------------------
+        # ---- materialize ----------------------------------------------------
         def materialize():
-            parts = [
-                cat.read("triples_candidate"),
-                cat.read("triples_mentions"),
-                cat.read("triples_dictionary"),
-            ]
-            data_triples = parts[0]
-            for p in parts[1:]:
-                data_triples = data_triples.unionByName(p)
-            cm = cat.read("canonical_map")
+            data_triples = (
+                cat.read("triples_candidate")
+                .unionByName(cat.read("triples_mentions"))
+                .unionByName(cat.read("triples_dictionary"))
+            )
             # the (entity-scale, already-materialized) map's row count
             # decides the rewrite join strategy: broadcast while it fits,
             # shuffle join once it doesn't (judge r2 "what's wrong" #1 —
@@ -252,17 +292,36 @@ class Pipeline:
                 # collapse canonical→original into self-loops
                 data_triples = CN.rewrite_triples(
                     data_triples,
-                    CN.canonical_rewrite_map(cm, ns=self.ns),
+                    CN.canonical_rewrite_map(cat.read("canonical_map"), ns=self.ns),
                     broadcast_map=n_map <= self.broadcast_map_max_rows,
                 )
             all_triples = data_triples.unionByName(cat.read("triples_sameas"))
-            return {FINAL_TABLE: EX.dedup_triples(all_triples)}
+            return EX.dedup_triples(all_triples)
 
-        self._stage(run_id, "materialize", fingerprint, force, materialize, [FINAL_TABLE], metrics)
-
-        metrics["total_wall_s"] = sum(
-            m.get("wall_s", 0.0) for k, m in metrics.items() if isinstance(m, dict)
-        )
+        # (stage, table, tables it reads, build); a stage's first table is
+        # the one its per-partition lineage rows count
+        tables = [
+            ("normalize", "transcripts_norm", (), transcripts_norm),
+            ("normalize", "transcripts_quarantine", (), lambda: EX.quarantined(transcripts)),
+            ("extract", "triples_candidate", ("transcripts_norm",), triples_candidate),
+            ("extract", "mentions", ("transcripts_norm",), mentions),
+            ("link", "mentions_linked", ("mentions",),
+             lambda: LK.link_mentions(cat.read("mentions"), dictionary, ns=self.ns)),
+            ("link", "triples_mentions", ("mentions_linked",),
+             lambda: LK.mention_triples(cat.read("mentions_linked"), ns=self.ns)),
+            ("link", "triples_dictionary", (), lambda: LK.dictionary_triples(dictionary, ns=self.ns)),
+            ("link", "entities_new", ("mentions_linked",),
+             lambda: LK.new_entities(cat.read("mentions_linked"))),
+            ("canonicalize", "canonical_map", (), canonical_map),
+            ("canonicalize", "triples_sameas", ("canonical_map",),
+             lambda: CN.sameas_triples(canon[0], ns=self.ns)),
+            ("materialize", FINAL_TABLE,
+             ("triples_candidate", "triples_mentions", "triples_dictionary",
+              "canonical_map", "triples_sameas"),
+             materialize),
+        ]
+        metrics = {"run_id": run_id} | self._run_tables(run_id, fingerprint, force, tables)
+        metrics["total_wall_s"] = time.time() - t_run
         return metrics
 
     def triples(self) -> DataFrame:

@@ -96,6 +96,7 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("rows_out", T.LongType(), True),
         T.StructField("wall_ms", T.LongType(), True),
         T.StructField("status", T.StringType(), False),
+        T.StructField("error", T.StringType(), True),
         T.StructField("finished_at", T.StringType(), True),
     ]
 )

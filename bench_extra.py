@@ -241,9 +241,10 @@ def main_cc():
 
 def _write_plans(event_log: str, root: str) -> dict[str, str]:
     """{table: final formatted plan} of every parquet write under
-    ``root``/wh in a Spark event log: the plan of the last adaptive update
-    of each SQL execution (the start event's plan when AQE never re-planned
-    it)."""
+    ``root``/wh in a Spark event log, in table-name order: the plan of the
+    last adaptive update of each SQL execution (the start event's plan when
+    AQE never re-planned it). The pipeline writes independent tables
+    concurrently, so execution ids do not give a stable order."""
     import re
 
     plans: dict[int, str] = {}
@@ -260,7 +261,7 @@ def _write_plans(event_log: str, root: str) -> dict[str, str]:
             # runs
             text = re.sub(r"#\d+", "#n", re.sub(r"plan_id=\d+", "plan_id=n", text))
             out[m.group(1)] = text.replace("file:" + root, "<tmp>").replace(root, "<tmp>")
-    return out
+    return dict(sorted(out.items()))
 
 
 def main_plans():

@@ -1,13 +1,18 @@
 """Pipeline end-to-end + idempotent-resume tests (SURVEY §5.2 item 3:
 kill after stage k, re-run, byte-identical output)."""
 
+import itertools
+import json
 import os
 import shutil
+import sys
+import threading
 
 import pytest
 from pyspark.sql import functions as F
 
-from anything2rdf_spark.plans.pipeline import Pipeline
+from anything2rdf_spark.operators import link as LK
+from anything2rdf_spark.plans.pipeline import STAGES, Pipeline
 from anything2rdf_spark.sources import synth
 
 
@@ -60,6 +65,48 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path, inputs):
     assert m4["normalize"]["status"] == "done"
 
 
+def test_pipeline_failed_stage_leaves_trace(spark, tmp_path, inputs, monkeypatch):
+    """A table whose build raises leaves a failed row for its stage and
+    starts none of its dependents, while independent stages finish; run()
+    raises that error, and a resumed run recomputes only what is missing."""
+
+    class LinkBroke(RuntimeError):
+        pass
+
+    def broken(*args, **kwargs):
+        raise LinkBroke("link_mentions failed")
+
+    clean = Pipeline(spark, str(tmp_path / "clean"), n_buckets=4)
+    clean.run(**inputs, fingerprint="fp")
+
+    wh = str(tmp_path / "wh")
+    p = Pipeline(spark, wh, n_buckets=4)
+    with monkeypatch.context() as mp:
+        mp.setattr(LK, "link_mentions", broken)
+        with pytest.raises(LinkBroke):
+            p.run(**inputs, fingerprint="fp")
+    rows = [r for r in p.registry.metrics() if r["partition_id"] is None]
+    assert [(r["stage"], r["error"]) for r in rows if r["status"] == "failed"] == [
+        ("link", "LinkBroke")
+    ]
+    done = {r["stage"] for r in rows if r["status"] == "done"}
+    assert "link" not in done and "materialize" not in done
+    assert "canonicalize" in done
+    # tables that do not read the failed one still commit; its readers
+    # never start
+    assert p.catalog.exists("triples_dictionary")
+    assert not any(
+        p.catalog.exists(t) for t in ("triples_mentions", "entities_new", "triples")
+    )
+
+    m = Pipeline(spark, wh, n_buckets=4).run(**inputs, fingerprint="fp")
+    assert {s: m[s]["status"] for s in STAGES} == {
+        "normalize": "skipped", "extract": "skipped", "link": "done",
+        "canonicalize": "skipped", "materialize": "done",
+    }
+    assert _triple_set(p.triples()) == _triple_set(clean.triples())
+
+
 def test_pipeline_canonicalization_rewrites_mentions(spark, tmp_path):
     """Alias edges between entity ids must rewrite mention triples to the
     canonical IRI and emit owl:sameAs."""
@@ -108,7 +155,9 @@ def test_pipeline_run_with_empty_and_null_labels(spark, tmp_path):
 def test_lineage_metrics_recorded(spark, tmp_path, inputs):
     wh = str(tmp_path / "wh3")
     p = Pipeline(spark, wh, n_buckets=4)
-    p.run(**inputs, fingerprint="fp")
+    m = p.run(**inputs, fingerprint="fp")
+    # stage walls overlap; the run's own wall covers every one of them
+    assert all(m["total_wall_s"] >= m[s]["wall_s"] > 0 for s in STAGES), m
     rows = p.registry.metrics()
     stages = {r["stage"] for r in rows}
     assert stages == {"normalize", "extract", "link", "canonicalize", "materialize"}
@@ -134,6 +183,36 @@ def test_lineage_metrics_recorded(spark, tmp_path, inputs):
     }
     assert bucketed == {"triples"}
     assert p.catalog.row_count("triples") == p.triples().count()
+
+
+def test_lineage_record_is_thread_safe(tmp_path):
+    """Concurrent records never interleave: each stage row follows its own
+    partition rows as one block, even when a record spans many buffered
+    writes."""
+    from anything2rdf_spark.plans.lineage import LineageRegistry
+
+    reg = LineageRegistry(str(tmp_path / "wh"))
+    parts = {pid: pid + 1 for pid in range(1000)}
+
+    def append(k):
+        for j in range(5):
+            reg.record(f"r{k}-{j}", "link", "fp", None, 1, 1, partition_rows=parts)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=append, args=(k,)) for k in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    with open(reg.path) as f:
+        run_ids = [json.loads(line)["run_id"] for line in f]
+    blocks = [(r, len(list(g))) for r, g in itertools.groupby(run_ids)]
+    assert len(blocks) == 40 and all(n == len(parts) + 1 for _, n in blocks)
 
 
 def test_pipeline_non_default_ns(spark, tmp_path, inputs):

@@ -283,35 +283,90 @@ def test_pq_adc_scan_broadcasts_queries(spark):
     assert "SortMergeJoin" not in p
 
 
-def test_canonicalize_job_budget(spark, tmp_path, monkeypatch):
+def _jobs(sc) -> list[tuple[int, str | None, str | None]]:
+    """(job id, job group, description) of every job in the app status
+    store, read once the listener bus has drained."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    seq = sc._jsc.sc().statusStore().jobsList(None)  # noqa: SLF001
+
+    def opt(o):
+        return o.get() if o.isDefined() else None
+
+    return [
+        (j.jobId(), opt(j.jobGroup()), opt(j.description()))
+        for j in (seq.apply(i) for i in range(seq.size()))
+    ]
+
+
+def _jobs_since(sc, after: int) -> list[tuple[str | None, str | None]]:
+    """(job group, description) of every job with an id above ``after``."""
+    return [(g, d) for j, g, d in _jobs(sc) if j > after]
+
+
+def _last_job_id(sc) -> int:
+    return max((j for j, _, _ in _jobs(sc)), default=-1)
+
+
+@contextlib.contextmanager
+def _job_group(sc, group: str):
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_canonicalize_job_budget(spark, tmp_path):
     """A pipeline's canonicalize stage over the 1,000-node fixture chain
     runs at most 4 Spark jobs: the edge collect of the driver's union-find
     and the two table writes (the checkpointed loop ran ~80, one per AQE
-    query stage of each round). Jobs are counted by a job group set per
-    stage."""
+    query stage of each round). Jobs are counted in the test's own job
+    group by the ``canonicalize:<table>`` descriptions the pipeline sets."""
     from anything2rdf_spark.plans.pipeline import Pipeline
 
     sc = spark.sparkContext
-    stage = Pipeline._stage
+    after = _last_job_id(sc)
+    with _job_group(sc, "budget"):
+        Pipeline(spark, str(tmp_path / "wh"), n_buckets=4).run(
+            transcripts=synth.transcripts(spark, n_convs=5, seed=7),
+            dictionary=synth.entity_dictionary(spark),
+            alias_edges=synth.alias_edges(spark, big_chain=1000),
+            dictionary_surfaces=synth.ALL_MENTION_NAMES,
+            force=True,
+        )
+    jobs = _jobs_since(sc, after)
+    assert any(d.startswith("link:") for g, d in jobs if g == "budget")  # the tagging works
+    canon = [d for g, d in jobs if g == "budget" and d.startswith("canonicalize:")]
+    assert 0 < len(canon) <= 4, canon
 
-    def grouped(self, run_id, name, *args):
-        sc.setJobGroup(f"budget-{name}", name)
-        try:
-            return stage(self, run_id, name, *args)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
 
-    monkeypatch.setattr(Pipeline, "_stage", grouped)
-    Pipeline(spark, str(tmp_path / "wh"), n_buckets=4).run(
-        transcripts=synth.transcripts(spark, n_convs=5, seed=7),
-        dictionary=synth.entity_dictionary(spark),
-        alias_edges=synth.alias_edges(spark, big_chain=1000),
-        dictionary_surfaces=synth.ALL_MENTION_NAMES,
-        force=True,
-    )
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
-    tracker = sc.statusTracker()
-    assert tracker.getJobIdsForGroup("budget-link")  # the grouping works
-    jobs = tracker.getJobIdsForGroup("budget-canonicalize")
-    assert 0 < len(jobs) <= 4, jobs
+def test_pipeline_jobs_keep_callers_group(spark, tmp_path):
+    """Every job of a run stays in the job group its caller set, tagged
+    with the ``<stage>:<table>`` it builds, and the run leaves the caller's
+    own group and description as they were."""
+    from anything2rdf_spark.plans.pipeline import Pipeline
+
+    sc = spark.sparkContext
+    inputs = {
+        "transcripts": synth.transcripts(spark, n_convs=5, seed=7),
+        "dictionary": synth.entity_dictionary(spark),
+        "code_tables": synth.code_tables(spark),
+        "alias_edges": synth.alias_edges(spark, big_chain=50),
+        "dictionary_surfaces": synth.ALL_MENTION_NAMES,
+    }
+    after = _last_job_id(sc)
+    with _job_group(sc, "caller"):
+        Pipeline(spark, str(tmp_path / "wh"), n_buckets=4).run(**inputs, force=True)
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    jobs = _jobs_since(sc, after)
+    assert jobs and all(g == "caller" for g, _ in jobs), jobs
+    assert {d for _, d in jobs} == {
+        "normalize:transcripts_norm", "normalize:transcripts_quarantine",
+        "extract:triples_candidate", "extract:mentions",
+        "link:mentions_linked", "link:triples_mentions", "link:triples_dictionary",
+        "link:entities_new",
+        "canonicalize:canonical_map", "canonicalize:triples_sameas",
+        "materialize:triples",
+    }
