@@ -16,6 +16,9 @@ Mention detection is one native JVM regex scan at every dictionary size
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_, or_
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -77,15 +80,22 @@ def _t(subj, pred: str, obj_iri=None, obj_lit=None, lang=None, dtype=None, guard
     return s
 
 
+# the columns an admissible turn must have: its key, a role and a text
+ADMISSION_COLS = ("conv_id", "turn_idx", "role", "text")
+
+
 def admissible(df: DataFrame) -> DataFrame:
     """Row admission predicate (P3) — the analog of skipping speeches without
-    speaker-id/year (OBCXML2RDF.scala:179): a turn needs a role and a text.
-    Inadmissible rows go to the quarantine table, not to /dev/null."""
-    return df.filter(F.col("role").isNotNull() & F.col("text").isNotNull())
+    speaker-id/year (OBCXML2RDF.scala:179): every ``ADMISSION_COLS`` value
+    is non-NULL. Inadmissible rows go to the quarantine table, not to
+    /dev/null."""
+    return df.filter(reduce(and_, [F.col(c).isNotNull() for c in ADMISSION_COLS]))
 
 
 def quarantined(df: DataFrame) -> DataFrame:
-    return df.filter(F.col("role").isNull() | F.col("text").isNull())
+    """The exact complement of ``admissible``: every input row is in one
+    of the two."""
+    return df.filter(reduce(or_, [F.col(c).isNull() for c in ADMISSION_COLS]))
 
 
 def extract_triples(transcripts: DataFrame, ns: str = NS, dictionary_surfaces=None) -> DataFrame:

@@ -39,7 +39,11 @@ def ordered_turns_skew_safe(df: DataFrame, bucket_size: int = 4096) -> DataFrame
        window over the *tiny* bucket relation;
     3. rank = offset + within-bucket rank.
 
-    Exactly equals ``ordered_turns`` output (test-enforced).
+    Exactly equals ``ordered_turns`` output for rows whose ``conv_id`` and
+    ``turn_idx`` are non-NULL (test-enforced). The offsets join on
+    ``(conv_id, bucket)`` drops a row with a NULL key, which
+    ``ordered_turns`` keeps; the pipeline ranks only ``extract.admissible``
+    rows, which have both keys.
     """
     b = (F.col("turn_idx") / bucket_size).cast("long")
     tagged = df.withColumn("_b", b).withColumn(

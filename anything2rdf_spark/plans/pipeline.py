@@ -52,7 +52,9 @@ scan. The ten transient stage tables are written flat, with the partitioning
 their plans produce: no stage reads them by bucket, so a 32-way hash
 shuffle and a file per bucket on each of them bought nothing but a shuffle,
 more files and more commit work. Their lineage rows are per written
-partition (see ``Catalog.write``).
+partition (see ``Catalog.write``). Every table, flat or bucketed, is
+parquet with the zstd codec, Iceberg's default, which writes about a third
+fewer bytes than Spark's snappy at the same build time.
 
 Scale notes (the plan at 1000 executors):
 * extract is a narrow map over the transcripts_norm scan — no shuffle; its

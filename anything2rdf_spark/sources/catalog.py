@@ -32,14 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.Table  # noqa: SLF001
-        return True
-    except Exception:
-        return False
-
-
 class Catalog:
     """A stage-output catalog rooted at a warehouse directory.
 
@@ -50,6 +42,13 @@ class Catalog:
     per-file size under skew. A table written without one is flat: one
     file per non-empty partition of the DataFrame's plan, no shuffle.
     ``Pipeline`` buckets only its final triple table.
+
+    Every table is written with parquet's zstd codec, Iceberg's default
+    (``write.parquet.compression-codec``), rather than Spark's snappy: each
+    checkpoint is written once and read back by its readers and by resume,
+    so the bytes are the cost it pays, and zstd cuts a build's warehouse by
+    about a third at the same build time. Parquet records the codec per
+    column chunk, so tables written with another codec still read back.
     """
 
     def __init__(self, spark: SparkSession, warehouse: str, n_buckets: int = 32):
@@ -95,17 +94,13 @@ class Catalog:
             out = df.withColumn(
                 "pbucket", F.pmod(F.xxhash64(F.col(bucket_col)), F.lit(self.n_buckets))
             )
-            (
-                # hash write-distribution (Iceberg write.distribution-mode=hash):
-                # co-locate each bucket in one task so the layout is
-                # bucket-per-file instead of tasks×buckets small files
-                out.repartition(self.n_buckets, "pbucket")
-                .write.mode("overwrite")
-                .partitionBy("pbucket")
-                .parquet(self.path(table))
-            )
+            # hash write-distribution (Iceberg write.distribution-mode=hash):
+            # co-locate each bucket in one task so the layout is
+            # bucket-per-file instead of tasks×buckets small files
+            writer = out.repartition(self.n_buckets, "pbucket").write.partitionBy("pbucket")
         else:
-            df.write.mode("overwrite").parquet(self.path(table))
+            writer = df.write
+        writer.mode("overwrite").option("compression", "zstd").parquet(self.path(table))
         # schema sidecar: empty tables write no parquet footers, so the
         # reader needs the schema from here (Iceberg would carry it in
         # table metadata). Written AFTER the parquet commit — exists()

@@ -10,6 +10,7 @@ Usage (pin externally, e.g. `taskset -c 8-15 python bench_extra.py curate`):
     python bench_extra.py scan     # mention scan at 10^2..10^5 surfaces
     python bench_extra.py cc       # connected components at 10^3..10^6 edges
     python bench_extra.py plans OUT.txt  # stage-table write plans, sf0.001
+    python bench_extra.py storage WORKLOAD SEED  # bytes/files/codec per table
 """
 
 from __future__ import annotations
@@ -264,6 +265,69 @@ def _write_plans(event_log: str, root: str) -> dict[str, str]:
     return dict(sorted(out.items()))
 
 
+def table_storage(warehouse: str) -> dict[str, dict]:
+    """{table: bytes, files and codecs} of every table directory in a
+    warehouse: the parquet files' sizes, and the compression codecs of all
+    their column chunks, read from the footers."""
+    import pyarrow.parquet as pq
+
+    out: dict[str, dict] = {}
+    for table in sorted(os.listdir(warehouse)):
+        root = os.path.join(warehouse, table)
+        if not os.path.isdir(root):
+            continue
+        size = files = 0
+        codecs: set[str] = set()
+        for d, _, names in os.walk(root):
+            for n in names:
+                if n.endswith(".parquet"):
+                    fp = os.path.join(d, n)
+                    size += os.path.getsize(fp)
+                    files += 1
+                    md = pq.ParquetFile(fp).metadata
+                    codecs.update(
+                        md.row_group(g).column(c).compression
+                        for g in range(md.num_row_groups)
+                        for c in range(md.num_columns)
+                    )
+        out[table] = {"bytes": size, "files": files, "codecs": sorted(codecs)}
+    return out
+
+
+def main_storage():
+    """Parquet bytes, file count and column-chunk codecs of each checkpoint
+    table after one cold build of a kgbench workload's seeded input
+    (``storage kg_turns 4501``), in a session set up as the benchmark sets
+    it up. Prints one JSON line per table, then the totals."""
+    import shutil
+    import tempfile
+
+    from anything2rdf_spark.plans.pipeline import Pipeline
+    from kgbench import harness
+
+    workload, seed = sys.argv[2], int(sys.argv[3])
+    tmp = tempfile.mkdtemp(prefix="a2r_bx_storage_")
+    try:
+        os.makedirs(os.path.join(tmp, "local"))
+        spark, inp, _ = harness.setup(workload, seed, tmp)
+        wh = os.path.join(tmp, "wh")
+        try:
+            Pipeline(spark, wh, n_buckets=harness.N_BUCKETS).run(
+                **inp.pipeline_args(spark), force=True
+            )
+        finally:
+            harness.stop_spark(spark)
+        tables = table_storage(wh)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    for table, st in tables.items():
+        print(json.dumps({"table": table} | st), flush=True)
+    print(json.dumps({
+        "total_bytes": sum(st["bytes"] for st in tables.values()),
+        "total_files": sum(st["files"] for st in tables.values()),
+    }), flush=True)
+
+
 def main_plans():
     """Formatted physical plans of the stage-table writes of one
     ``Pipeline.run`` on bench.py's sf0.001 input (100 conversations), taken
@@ -318,5 +382,5 @@ if __name__ == "__main__":
     which = sys.argv[1] if len(sys.argv) > 1 else "curate"
     {
         "curate": main_curate, "emit": main_emit, "scan": main_scan, "cc": main_cc,
-        "plans": main_plans,
+        "plans": main_plans, "storage": main_storage,
     }[which]()

@@ -244,3 +244,81 @@ def test_pipeline_non_default_ns(spark, tmp_path, inputs):
     mentions = triples.filter(F.col("pred") == P_MENTIONS)
     assert mentions.count() > 0
     assert mentions.filter(~F.col("obj_iri").startswith(other)).count() == 0
+
+
+def _codecs(root):
+    """{parquet file: set of its column chunks' codecs}, from the footers."""
+    import pyarrow.parquet as pq
+
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            if n.endswith(".parquet"):
+                md = pq.ParquetFile(os.path.join(d, n)).metadata
+                out[os.path.join(d, n)] = {
+                    md.row_group(g).column(c).compression
+                    for g in range(md.num_row_groups)
+                    for c in range(md.num_columns)
+                }
+    return out
+
+
+def test_checkpoints_are_zstd(spark, tmp_path, inputs):
+    """Every parquet file of every checkpoint, the bucketed triple table
+    included, holds only zstd column chunks."""
+    wh = str(tmp_path / "whz")
+    Pipeline(spark, wh, n_buckets=4).run(**inputs, fingerprint="z")
+    codecs = _codecs(wh)
+    assert any("pbucket=" in fp for fp in codecs)
+    assert {os.path.relpath(fp, wh).split(os.sep)[0] for fp in codecs} >= {
+        "transcripts_norm", "triples_candidate", "mentions_linked", "triples"
+    }
+    assert all(c == {"ZSTD"} for c in codecs.values()), codecs
+
+
+def test_resume_reads_snappy_checkpoints(spark, tmp_path, inputs):
+    """A warehouse whose normalize tables an older build wrote with snappy
+    resumes: the stages that read them give the clean run's triples."""
+    wh = str(tmp_path / "whs")
+    p = Pipeline(spark, wh, n_buckets=4)
+    p.run(**inputs, fingerprint="s")
+    clean = _triple_set(p.triples())
+    for t in ("transcripts_norm", "transcripts_quarantine"):
+        path, tmp = p.catalog.path(t), str(tmp_path / f"{t}_snappy")
+        p.catalog.read(t).write.option("compression", "snappy").parquet(tmp)
+        shutil.copy(os.path.join(path, "_schema.json"), tmp)
+        shutil.rmtree(path)
+        os.rename(tmp, path)
+        assert all(c == {"SNAPPY"} for c in _codecs(path).values())
+    for t in ("triples_candidate", "mentions", "mentions_linked", "triples_mentions",
+              "entities_new", "triples"):
+        p.catalog.drop(t)
+    m = Pipeline(spark, wh, n_buckets=4).run(**inputs, fingerprint="s")
+    assert {s: m[s]["status"] for s in STAGES} == {
+        "normalize": "skipped", "extract": "done", "link": "done",
+        "canonicalize": "skipped", "materialize": "done",
+    }
+    assert _triple_set(p.triples()) == clean
+
+
+def test_normalize_keeps_every_turn(spark, tmp_path):
+    """Each input turn lands in transcripts_norm or transcripts_quarantine,
+    whichever of conv_id, turn_idx, role and text is NULL."""
+    rows = [
+        ("c1", 0, "user", "Ada Lovelace wrote notes", None, None),
+        ("c1", 1, "assistant", "noted", None, None),
+        (None, 2, "user", "no conversation", None, None),
+        ("c1", None, "user", "no index", None, None),
+        ("c2", 0, None, "no role", None, None),
+        ("c2", 1, "user", None, None, None),
+    ]
+    ts = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    p = Pipeline(spark, str(tmp_path / "whnull"), n_buckets=4)
+    p.run(transcripts=ts, dictionary=synth.entity_dictionary(spark), fingerprint="null")
+    cols = ts.columns
+    norm = [tuple(r) for r in p.catalog.read("transcripts_norm").select(*cols).collect()]
+    quarantine = [tuple(r) for r in p.catalog.read("transcripts_quarantine").collect()]
+    assert sorted(norm, key=repr) == sorted(rows[:2], key=repr)
+    assert sorted(quarantine, key=repr) == sorted(rows[2:], key=repr)
