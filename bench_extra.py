@@ -11,6 +11,7 @@ Usage (pin externally, e.g. `taskset -c 8-15 python bench_extra.py curate`):
     python bench_extra.py cc       # connected components at 10^3..10^6 edges
     python bench_extra.py plans OUT.txt  # stage-table write plans, sf0.001
     python bench_extra.py storage WORKLOAD SEED  # bytes/files/codec per table
+    python bench_extra.py startup  # session start and class loading, archive off/on
 """
 
 from __future__ import annotations
@@ -328,6 +329,32 @@ def main_storage():
     }), flush=True)
 
 
+def _sf0001_input(spark, root: str) -> str:
+    """bench.py's sf0.001 transcripts (100 conversations), written as
+    parquet under ``root``; returns the path."""
+    from anything2rdf_spark.sources import synth
+
+    inp = os.path.join(root, "transcripts")
+    synth.transcripts(spark, n_convs=100, seed=42).repartition(32).write.parquet(inp)
+    return inp
+
+
+def _sf0001_build(spark, root: str, inp: str) -> None:
+    """One ``Pipeline.run`` of the transcripts at ``inp`` with the synth
+    dictionary, code tables and a 2,000-node alias chain, into ``root``/wh."""
+    from anything2rdf_spark.plans.pipeline import Pipeline
+    from anything2rdf_spark.sources import synth
+
+    Pipeline(spark, os.path.join(root, "wh"), n_buckets=32).run(
+        transcripts=spark.read.parquet(inp),
+        dictionary=synth.entity_dictionary(spark),
+        code_tables=synth.code_tables(spark),
+        alias_edges=synth.alias_edges(spark, big_chain=2000),
+        dictionary_surfaces=synth.ALL_MENTION_NAMES,
+        force=True,
+    )
+
+
 def main_plans():
     """Formatted physical plans of the stage-table writes of one
     ``Pipeline.run`` on bench.py's sf0.001 input (100 conversations), taken
@@ -337,9 +364,7 @@ def main_plans():
     import shutil
     import tempfile
 
-    from anything2rdf_spark.plans.pipeline import Pipeline
     from anything2rdf_spark.session import get_spark
-    from anything2rdf_spark.sources import synth
 
     out_path = sys.argv[2]
     tmp = tempfile.mkdtemp(prefix="a2r_bx_plans_")
@@ -355,16 +380,7 @@ def main_plans():
         },
     )
     try:
-        inp = os.path.join(tmp, "transcripts")
-        synth.transcripts(spark, n_convs=100, seed=42).repartition(32).write.parquet(inp)
-        Pipeline(spark, os.path.join(tmp, "wh"), n_buckets=32).run(
-            transcripts=spark.read.parquet(inp),
-            dictionary=synth.entity_dictionary(spark),
-            code_tables=synth.code_tables(spark),
-            alias_edges=synth.alias_edges(spark, big_chain=2000),
-            dictionary_surfaces=synth.ALL_MENTION_NAMES,
-            force=True,
-        )
+        _sf0001_build(spark, tmp, _sf0001_input(spark, tmp))
     finally:
         spark.stop()
     try:
@@ -378,9 +394,89 @@ def main_plans():
     print(json.dumps({"plans": out_path, "tables": list(plans)}), flush=True)
 
 
+def _class_load_sources(log: str, skip: int = 0) -> tuple[dict[str, int], int]:
+    """Counts of the ``-Xlog:class+load`` lines of ``log`` after the first
+    ``skip``, by where the class came from: ``archive`` (a class-data
+    archive, the JDK's or the dynamic one), ``jar``, ``jrt`` (the JDK's
+    modules) or ``generated`` (defined at run time: lambdas, proxies,
+    reflection accessors, Janino's classes). Also returns the line count."""
+    counts = dict.fromkeys(("archive", "jar", "jrt", "generated"), 0)
+    with open(log) as f:
+        lines = [ln for ln in f if "[class,load]" in ln]
+    for ln in lines[skip:]:
+        src = ln.partition(" source: ")[2]
+        kind = ("archive" if src.startswith("shared objects file")
+                else "jrt" if src.startswith("jrt:")
+                else "jar" if ".jar" in src
+                else "generated")
+        counts[kind] += 1
+    return counts, len(lines)
+
+
+def main_startup():
+    """Where a fresh driver JVM's start goes, without and with the class
+    archive (``session.get_spark``). Per side, three fresh JVMs one after
+    another, each with the benchmark's 2 GB heap, each running one
+    ``Pipeline.run`` on bench.py's sf0.001 input (100 conversations). Per
+    JVM, one JSON line: the session-start wall, whether the archive is
+    mapped (read from /proc/<pid>/maps) or recorded at exit, the build and
+    stop walls, and the classes loaded by the start and by the build, by
+    source (``_class_load_sources``). The "off" side passes its own
+    ``spark.driver.extraJavaOptions``, which leaves the archive out. The
+    class-load log is turned on through ``JAVA_TOOL_OPTIONS``, which is not
+    part of the archive's key. On an empty cache the first "on" JVM records
+    the archive and maps nothing."""
+    import shutil
+    import tempfile
+
+    from anything2rdf_spark.session import get_spark
+    from kgbench import harness
+
+    tmp = tempfile.mkdtemp(prefix="a2r_bx_startup_")
+    gc_opts = os.environ.get("SPARK_GC_OPTS", "-XX:+UseParallelGC")
+    try:
+        for side in ("off", "on"):
+            for k in range(3):
+                run = os.path.join(tmp, f"{side}{k}")
+                os.makedirs(os.path.join(run, "local"))
+                os.environ["JAVA_TOOL_OPTIONS"] = f"-Xlog:class+load=info:file={run}/classes-%p.log"
+                conf = {"spark.driver.memory": harness.DRIVER_MEMORY,
+                        "spark.local.dir": os.path.join(run, "local")}
+                if side == "off":
+                    conf["spark.driver.extraJavaOptions"] = gc_opts
+                t0 = time.perf_counter()
+                spark = get_spark(master=f"local[{harness.task_threads()}]",
+                                  app_name="a2r-bx-startup", extra_conf=conf)
+                session_s = time.perf_counter() - t0
+                pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()  # noqa: SLF001
+                with open(f"/proc/{pid}/maps") as f:
+                    mapped = any(ln.rstrip().endswith(".jsa") and "anything2rdf_spark" in ln for ln in f)
+                with open(f"/proc/{pid}/cmdline") as f:
+                    recording = "-XX:ArchiveClassesAtExit=" in f.read()
+                log = os.path.join(run, f"classes-{pid}.log")
+                start, _ = _class_load_sources(log)
+                inp = _sf0001_input(spark, run)
+                _, n_input = _class_load_sources(log)
+                t0 = time.perf_counter()
+                _sf0001_build(spark, run, inp)
+                build_s = time.perf_counter() - t0
+                build, _ = _class_load_sources(log, n_input)
+                t0 = time.perf_counter()
+                harness.stop_spark(spark)
+                print(json.dumps({
+                    "side": side, "jvm": k + 1, "session_s": round(session_s, 2),
+                    "archive_mapped": mapped,
+                    "recording": recording, "build_s": round(build_s, 2),
+                    "stop_s": round(time.perf_counter() - t0, 2),
+                    "classes_start": start, "classes_build": build,
+                }), flush=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 if __name__ == "__main__":
     which = sys.argv[1] if len(sys.argv) > 1 else "curate"
     {
         "curate": main_curate, "emit": main_emit, "scan": main_scan, "cc": main_cc,
-        "plans": main_plans, "storage": main_storage,
+        "plans": main_plans, "storage": main_storage, "startup": main_startup,
     }[which]()
